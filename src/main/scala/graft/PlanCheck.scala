@@ -13,6 +13,7 @@ object PlanCheck {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = SparkSession.builder()
       .master("local[4]")
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

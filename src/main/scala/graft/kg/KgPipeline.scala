@@ -296,7 +296,8 @@ object KgPipeline {
           KgStages.depsFromMentions(mentions, dict,
             broadcastDict = conf.broadcastDict), "deps"))
         timed("l3_skeleton")(write(KgStages.skeletonFromMentions(mentions,
-          read("deps").select(col("target"))), "skeleton"))
+          read("deps").select(col("target")),
+          broadcastDict = conf.broadcastDict), "skeleton"))
       })
     val out = read("triples")
     // materialize-stage lineage fold: xxhash64, not sha2 — the fold only

@@ -261,13 +261,16 @@ object KgStages {
     * targets}. Equivalent to `skeletonDf(linkStage(...))`: a resolved
     * target with any mention IS a deps row, and a key whose mentions are
     * all URLRef never enters either side's candidate set. Asserted in
-    * KgSpec. */
-  def skeletonFromMentions(mentions: DataFrame,
-                           depsTargets: DataFrame): DataFrame =
+    * KgSpec. The targets are a subset of the dictionary, so they are
+    * broadcast exactly when `depsFromMentions` broadcasts it. */
+  def skeletonFromMentions(mentions: DataFrame, depsTargets: DataFrame,
+                           broadcastDict: Boolean = true): DataFrame = {
+    val t = depsTargets.select(col("target"))
     mentions.filter(!col("grammar").isin("URLRef"))
       .select(col("candidateKey").as("uri")).distinct()
-      .join(broadcast(depsTargets.select(col("target"))),
+      .join(if (broadcastDict) broadcast(t) else t,
         col("uri") === col("target"), "left_anti")
+  }
 
   /** Fuzzy label linking: literal triples on label-bearing predicates are
     * scored against a (label → uri) dictionary. Blocking = shared token

@@ -7,6 +7,7 @@ object ScaleProbe {
     val n = args.headOption.map(_.toLong).getOrElse(40000L)
     for (cpus <- Seq(32, 8, 32, 8)) {
       val spark = SparkSession.builder().master(s"local[$cpus]")
+        .withExtensions(new graft.GraftExtensions)
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.ui.enabled", "false").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")

@@ -224,6 +224,13 @@ object StreamOps {
     spark.conf.getOption("graft.stream.statePartitions").map(_.toInt)
       .getOrElse(spark.sparkContext.defaultParallelism)
 
+  /** Row limit of the read-back size probe: one past the budget, so a
+    * count above the budget shows the result does not fit. Saturates at
+    * `Int.MaxValue` (the most `limit` takes) instead of wrapping past
+    * `Long.MaxValue`. */
+  private[graft] def readBackProbeLimit(budget: Long): Int =
+    (math.min(budget, Int.MaxValue - 1L) + 1).toInt
+
   private def runAvailableNow(spark: SparkSession, dir: String,
                               readBackRowBudget: Long = ReadBackRowBudget)
                              (mkAgg: DataFrame => DataFrame)
@@ -304,8 +311,7 @@ object StreamOps {
     // byte-gate the driver materialization (the Cc.fitsDriverBudget
     // pattern): finalized-window counts are data-proportional, so the
     // read-back must not assume it fits the driver
-    val n = readBack.limit(
-      math.min(readBackRowBudget + 1, Int.MaxValue.toLong).toInt).count()
+    val n = readBack.limit(readBackProbeLimit(readBackRowBudget)).count()
     if (n <= readBackRowBudget) {
       // tiny — materialize driver-side so the staging/checkpoint/sink
       // temp trees can be deleted NOW instead of accumulating across

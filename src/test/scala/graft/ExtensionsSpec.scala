@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.functions._
 
 /** Native Catalyst extensions: slug expression (codegen) and MinHash
@@ -18,6 +18,34 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = { spark.stop(); super.afterAll() }
+
+  /** Runs `f` with the codegen-cache system property set to `v` (cleared
+    * for None), restoring the JVM's previous value afterwards. */
+  private def withCacheProp(v: Option[String])(f: => Unit): Unit = {
+    val key = GraftExtensions.CodegenCacheKey
+    def set(o: Option[String]): Unit = o match {
+      case Some(x) => sys.props(key) = x
+      case None => sys.props -= key
+    }
+    val saved = sys.props.get(key)
+    set(v)
+    try f finally set(saved)
+  }
+
+  test("applying the extensions sets the codegen cache default when unset") {
+    withCacheProp(None) {
+      new GraftExtensions().apply(new SparkSessionExtensions)
+      assert(sys.props.get(GraftExtensions.CodegenCacheKey) ==
+        Some(GraftExtensions.CodegenCacheEntries.toString))
+    }
+  }
+
+  test("an explicitly set codegen cache size is left alone") {
+    withCacheProp(Some("7")) {
+      new GraftExtensions().apply(new SparkSessionExtensions)
+      assert(sys.props.get(GraftExtensions.CodegenCacheKey) == Some("7"))
+    }
+  }
 
   test("graft_slug matches EntityDict.slug on samples and survives codegen") {
     import spark.implicits._

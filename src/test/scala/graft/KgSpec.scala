@@ -146,14 +146,18 @@ class KgSpec extends AnyFunSuite with BeforeAndAfterAll {
     def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.collect().map(_.toString).toSet
     val depsA = KgStages.depsDf(linked)
-    val depsB = KgStages.depsFromMentions(mentions, dict)
-    assert(rows(depsA) == rows(depsB))
-    assert(depsA.columns.toSeq == depsB.columns.toSeq)
     val skelA = KgStages.skeletonDf(linked)
-    val skelB = KgStages.skeletonFromMentions(mentions,
-      depsB.select(org.apache.spark.sql.functions.col("target")))
-    assert(rows(skelA) == rows(skelB))
-    assert(skelA.columns.toSeq == skelB.columns.toSeq)
+    // both settings of the pipeline's broadcastDict knob
+    for (bc <- Seq(true, false)) {
+      val depsB = KgStages.depsFromMentions(mentions, dict, broadcastDict = bc)
+      assert(rows(depsA) == rows(depsB), s"deps, broadcastDict=$bc")
+      assert(depsA.columns.toSeq == depsB.columns.toSeq)
+      val skelB = KgStages.skeletonFromMentions(mentions,
+        depsB.select(org.apache.spark.sql.functions.col("target")),
+        broadcastDict = bc)
+      assert(rows(skelA) == rows(skelB), s"skeleton, broadcastDict=$bc")
+      assert(skelA.columns.toSeq == skelB.columns.toSeq)
+    }
     assert(rows(depsA).nonEmpty && rows(skelA).nonEmpty)
     linked.unpersist(); parsed.unpersist()
   }

@@ -108,6 +108,14 @@ class StreamOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(a.nonEmpty && a == b)
   }
 
+  test("read-back probe limit saturates instead of wrapping") {
+    assert(StreamOps.readBackProbeLimit(Long.MaxValue) == Int.MaxValue)
+    assert(StreamOps.readBackProbeLimit(Int.MaxValue.toLong) == Int.MaxValue)
+    assert(StreamOps.readBackProbeLimit(StreamOps.ReadBackRowBudget) ==
+      StreamOps.ReadBackRowBudget + 1)
+    assert(StreamOps.readBackProbeLimit(0L) == 1)
+  }
+
   test("sessionize: batch-mode state function groups per user") {
     import spark.implicits._
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
