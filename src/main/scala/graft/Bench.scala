@@ -37,7 +37,7 @@ object Bench {
     * execute the identical plan — task and output-file counts included.
     * A cpus-derived count makes the N-level and 4N-level runs different
     * jobs, and the ratio measures plan size, not parallelism. */
-  private def session(cpus: Int, fixedShuffle: Option[Int] = None): SparkSession = {
+  private[graft] def session(cpus: Int, fixedShuffle: Option[Int] = None): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-bench-$cpus")

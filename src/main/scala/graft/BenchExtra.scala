@@ -1,46 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Optimization-round measurement harness (guide §1) — SEPARATE from the
-  * frozen graft.Bench: per-query noop-sink isolation, formatted-plan dumps,
-  * KG-pipeline stage timings, and a single-threaded micro-profile of the
-  * stage-P row function. Never used by the driver; numbers are cited in
-  * OPTIMIZATION_r06.md only.
+  * frozen graft.Bench, but built on its session so measured numbers
+  * transfer 1:1: per-query noop-sink and count timing, formatted-plan
+  * dumps, KG-pipeline stage timings at one or more parallelism levels, and
+  * a single-threaded micro-profile of the stage-P row function. Its numbers
+  * are never graded.
   *
   * Usage:
-  *   runMain graft.BenchExtra parse [nDocs]         — per-phase parse profile
-  *   runMain graft.BenchExtra pipeline [n] [cpus]   — stage timings
+  *   runMain graft.BenchExtra parse [nDocs]            — per-phase parse profile
+  *   runMain graft.BenchExtra pipeline [n] [cpus,...]  — stage timings per level
   *   runMain graft.BenchExtra noop <query> [query2 ...]  — noop-sink timing
+  *   runMain graft.BenchExtra time <query> [query2 ...]  — count-action timing
   *   runMain graft.BenchExtra explain <outDir> [query ...] — plan dumps
+  * Malformed arguments print the usage and exit 2.
   */
 object BenchExtra {
 
-  /** Mirror of the frozen Bench.session(): same shuffle/AQE/split shape so
-    * measured numbers transfer 1:1. */
-  private def session(cpus: Int, fixedShuffle: Option[Int] = None): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-benchextra-$cpus")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions",
-        fixedShuffle.map(_.toString).getOrElse((cpus * 3).toString))
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        fixedShuffle.isEmpty.toString)
-      .config("spark.sql.files.maxPartitionBytes",
-        if (fixedShuffle.isDefined) "16m" else "128m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", {
-        val b = new java.io.File("/dev/shm/graft-local"); b.mkdirs()
-        java.nio.file.Files.createTempDirectory(b.toPath, "x").toString
-      })
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private val Usage = "usage: BenchExtra parse [n] | pipeline [n] [cpus,...] | " +
+    "noop <q>... | time <q>... | explain <dir> [q...]"
 
   /** Single-threaded per-phase profile of the parse row function over a
     * synthetic corpus slice (same generator as the bench's KG pipeline). */
@@ -48,7 +28,7 @@ object BenchExtra {
     val docs = (0L until nDocs.toLong)
       .map(i => graft.kg.Corpus.doc(42L, i, nDocs.toLong).src).toArray
     def pass(label: String): Unit = {
-      var tGen, tFsm, tHeader, tSections, tMentions, tXml, tSha = 0.0
+      var tFsm, tHeader, tSections, tMentions, tXml, tSha = 0.0
       var nTriples, nMentions = 0L
       def timed[T](f: => T, add: Double => Unit): T = {
         val t0 = System.nanoTime(); val r = f
@@ -88,96 +68,83 @@ object BenchExtra {
       println(f"[$label] docs=$nDocs triples=$nTriples mentions=$nMentions " +
         f"fsm=$tFsm%.2fs header=$tHeader%.3fs sections=$tSections%.3fs " +
         f"mentions=$tMentions%.2fs toXml=$tXml%.2fs sha=$tSha%.2fs " +
-        f"total=$total%.2fs (${total * 1e6 / nDocs}%.0f us/doc)")
+        f"total=$total%.2fs (${total * 1e6 / nDocs}%.0f us/doc, " +
+        f"${nDocs / total}%.0f docs/s/core, ${nTriples / total}%.0f triples/s/core)")
     }
     pass("warm1"); pass("warm2"); pass("hot")
   }
 
-  private def pipelineProfile(n: Long, cpus: Int): Unit = {
-    import org.apache.spark.sql.SparkSession
-    val s = session(cpus, fixedShuffle = Some(24))
-    try {
-      import s.implicits._
-      // input pre-materialized to parquet UNTIMED, exactly like Bench.kgRun
-      def inputPath(nn: Long): String = {
-        val base = new java.io.File("/dev/shm/graft-bench"); base.mkdirs()
-        val p = java.nio.file.Files
-          .createTempDirectory(base.toPath, s"input$nn").toString
-        graft.kg.KgPipeline.synthesizeInput(s, nn, 42L).write
-          .mode("overwrite").parquet(p)
-        p
+  /** One warmed pipeline run of `n` docs per parallelism level, each level in
+    * a fresh session of the frozen bench's KG shape (24 fixed shuffle
+    * partitions) inside this one JVM. `busy`/`cpu` are the timed run's
+    * achieved concurrency and delivered cores (ConcurrencyMeter). */
+  private def pipelineProfile(n: Long, levels: Seq[Int]): Unit =
+    for (cpus <- levels) {
+      val s = Bench.session(cpus, fixedShuffle = Some(24))
+      try {
+        import s.implicits._
+        def tmpDir(tag: String): String = {
+          val base = new java.io.File("/dev/shm/graft-bench"); base.mkdirs()
+          java.nio.file.Files.createTempDirectory(base.toPath, tag).toString
+        }
+        // input pre-materialized to parquet UNTIMED, exactly like Bench.kgRun
+        def inputPath(nn: Long): String = {
+          val p = tmpDir(s"input$nn")
+          graft.kg.KgPipeline.synthesizeInput(s, nn, 42L).write
+            .mode("overwrite").parquet(p)
+          p
+        }
+        def once(tag: String, nn: Long, ip: String): graft.kg.KgPipeline.Summary = {
+          val wd = tmpDir(tag)
+          val input = s.read.parquet(ip).as[graft.model.SourceFile]
+          val sameAs = graft.kg.KgPipeline.sameAsEdges(s, nn)
+          val curated = graft.kg.KgPipeline.curatedTriples(s, nn)
+          val conf = graft.kg.KgPipeline.Conf(workDir = s"$wd/out", n = nn,
+            seed = 42L, runId = s"extra-$tag")
+          val sum = graft.kg.KgPipeline.run(s, conf, input, sameAs, curated)
+          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wd))
+          sum
+        }
+        val warmN = math.max(1000L, n / 8)
+        val warmIp = inputPath(warmN)
+        once("warm", warmN, warmIp)
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(warmIp))
+        val ip = inputPath(n)
+        val meter = graft.kg.ConcurrencyMeter.attach(s.sparkContext)
+        val sum = once("main", n, ip)
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ip))
+        println(f"pipeline n=$n cpus=$cpus wall=${sum.durationSec}%.1fs " +
+          f"triples=${sum.tripleCount} tps=${sum.triplesPerSec}%.0f " +
+          f"busy=${meter.taskSec / sum.durationSec}%.1f " +
+          f"cpu=${meter.cpuSec / sum.durationSec}%.1f")
+        println("stages: " + sum.stageSec.toSeq.sortBy(-_._2)
+          .map { case (k, v) => f"$k=$v%.1fs" }.mkString(" "))
+      } finally {
+        s.stop()
+        SparkSession.clearActiveSession()
+        SparkSession.clearDefaultSession()
       }
-      def once(tag: String, nn: Long, ip: String): graft.kg.KgPipeline.Summary = {
-        val base = new java.io.File("/dev/shm/graft-bench"); base.mkdirs()
-        val wd = java.nio.file.Files
-          .createTempDirectory(base.toPath, tag).toString
-        val input = s.read.parquet(ip).as[graft.model.SourceFile]
-        val sameAs = graft.kg.KgPipeline.sameAsEdges(s, nn)
-        val curated = graft.kg.KgPipeline.curatedTriples(s, nn)
-        val conf = graft.kg.KgPipeline.Conf(workDir = s"$wd/out", n = nn,
-          seed = 42L, runId = s"extra-$tag",
-          broadcastDict = sys.env.getOrElse("SPARK_GRAFT_BCAST", "true").toBoolean)
-        val sum = graft.kg.KgPipeline.run(s, conf, input, sameAs, curated)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wd))
-        sum
-      }
-      val warmN = math.max(1000L, n / 8)
-      val warmIp = inputPath(warmN)
-      once("warm", warmN, warmIp)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(warmIp))
-      val ip = inputPath(n)
-      val sum = once("main", n, ip)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ip))
-      println(f"pipeline n=$n cpus=$cpus wall=${sum.durationSec}%.1fs " +
-        f"triples=${sum.tripleCount} tps=${sum.triplesPerSec}%.0f")
-      println("stages: " + sum.stageSec.toSeq.sortBy(-_._2)
-        .map { case (k, v) => f"$k=$v%.1fs" }.mkString(" "))
-    } finally s.stop()
-  }
+    }
 
-  private def noopTime(queries: Seq[String]): Unit = {
+  /** Per-query timing of `action` — one warm pass, min of two timed, the
+    * frozen bench's discipline. `count` is the action the frozen bench
+    * grades; the noop sink isolates the plan from the action's own cost. */
+  private def timeQueries(label: String, queries: Seq[String])(
+      action: DataFrame => Unit): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val s = session(cpus)
+    val s = Bench.session(cpus)
     try {
-      val reg = SparkEntry.queries
-      for (q <- queries; fn <- reg.get(q)) {
-        // one warm pass, two timed — mirror of the frozen bench discipline
+      for (q <- queries; fn = SparkEntry.queries(q)) {
         def one(): Double = {
           val t0 = System.nanoTime()
-          fn(s, sfDir).write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
-          CacheRegistry.release()
-          dt
+          try { action(fn(s, sfDir)); (System.nanoTime() - t0) / 1e9 }
+          finally CacheRegistry.release()
         }
-        s.sparkContext.setJobDescription(s"noop:$q")
+        s.sparkContext.setJobDescription(s"$label:$q")
         one()
         val (a, b) = (one(), one())
-        println(f"$q%-28s noop min=${math.min(a, b)}%.3fs  (p1=$a%.3f p2=$b%.3f)")
-      }
-    } finally s.stop()
-  }
-
-  /** Count-based timing — the SAME action the frozen bench grades, so
-    * numbers transfer 1:1 (one warm pass, min of two timed). */
-  private def countTime(queries: Seq[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val s = session(cpus)
-    try {
-      val reg = SparkEntry.queries
-      def one(q: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        fn(s, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        CacheRegistry.release()
-        dt
-      }
-      for (q <- queries; fn <- reg.get(q)) {
-        s.sparkContext.setJobDescription(s"time:$q")
-        one(q, fn)
-        val (a, b) = (one(q, fn), one(q, fn))
-        println(f"$q%-28s count min=${math.min(a, b)}%.3fs  (p1=$a%.3f p2=$b%.3f)")
+        println(f"$q%-28s $label min=${math.min(a, b)}%.3fs  (p1=$a%.3f p2=$b%.3f)")
       }
     } finally s.stop()
   }
@@ -185,18 +152,17 @@ object BenchExtra {
   private def explainDump(outDir: String, queries: Seq[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val s = session(cpus)
+    val s = Bench.session(cpus)
     try {
       new java.io.File(outDir).mkdirs()
       val reg = SparkEntry.queries
       val names = if (queries.nonEmpty) queries else reg.keys.toSeq.sorted
-      for (q <- names; fn <- reg.get(q)) {
+      for (q <- names) {
         try {
-          val plan = fn(s, sfDir).queryExecution.explainString(
+          val plan = reg(q)(s, sfDir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$outDir/$q.txt"),
-            plan.getBytes("UTF-8"))
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(s"$outDir/$q.txt"), plan)
           println(s"wrote $outDir/$q.txt")
         } catch {
           case e: Throwable => println(s"EXPLAIN FAILED $q: ${e.getMessage}")
@@ -205,18 +171,26 @@ object BenchExtra {
     } finally s.stop()
   }
 
-  def main(args: Array[String]): Unit = args.toList match {
-    case "parse" :: rest =>
-      parseProfile(rest.headOption.map(_.toInt).getOrElse(3000))
-    case "pipeline" :: rest =>
-      val n = rest.headOption.map(_.toLong).getOrElse(50000L)
-      val cpus = rest.lift(1).map(_.toInt).getOrElse(4)
-      pipelineProfile(n, cpus)
-    case "noop" :: qs if qs.nonEmpty => noopTime(qs)
-    case "time" :: qs if qs.nonEmpty => countTime(qs)
-    case "explain" :: out :: qs => explainDump(out, qs)
-    case _ =>
-      System.err.println("usage: parse [n] | pipeline [n] [cpus] | " +
-        "noop <q>... | explain <dir> [q...]")
+  /** Every argument is checked before any session starts. */
+  def main(args: Array[String]): Unit = {
+    def usage(why: String): Nothing = {
+      System.err.println(s"$why\n$Usage"); sys.exit(2)
+    }
+    def int(a: String): Int =
+      a.toIntOption.filter(_ > 0).getOrElse(usage(s"not a positive number: $a"))
+    def known(qs: List[String]): List[String] =
+      qs.map(q => if (SparkEntry.queries.contains(q)) q else usage(s"unknown query $q"))
+    args.toList match {
+      case "parse" :: rest if rest.size <= 1 =>
+        parseProfile(rest.headOption.fold(3000)(int))
+      case "pipeline" :: rest if rest.size <= 2 =>
+        pipelineProfile(rest.headOption.fold(50000)(int).toLong,
+          rest.lift(1).fold(Seq(4))(_.split(",").toSeq.map(int)))
+      case "noop" :: qs if qs.nonEmpty =>
+        timeQueries("noop", known(qs))(_.write.format("noop").mode("overwrite").save())
+      case "time" :: qs if qs.nonEmpty => timeQueries("count", known(qs))(_.count())
+      case "explain" :: out :: qs => explainDump(out, known(qs))
+      case _ => usage(s"bad arguments: ${args.mkString(" ")}")
+    }
   }
 }

@@ -28,7 +28,6 @@ final class ConcurrencyMeter extends SparkListener {
   def taskSec: Double = taskMs.sum() / 1000.0
   /** Actual CPU seconds: cpuSec/wallSec ≈ cores the machine delivered. */
   def cpuSec: Double = cpuNs.sum() / 1e9
-  def reset(): Unit = { taskMs.reset(); cpuNs.reset() }
 }
 
 object ConcurrencyMeter {

@@ -23,7 +23,6 @@ object KgPipeline {
       format: String = "parquet",
       resume: Boolean = false,
       broadcastDict: Boolean = true,
-      salt: Int = 8,
       runId: String = "run0")
 
   final case class Summary(
@@ -385,29 +384,49 @@ object KgPipeline {
     run(spark, conf, synthesizeInput(spark, conf.n, conf.seed),
       sameAsEdges(spark, conf.n), curatedTriples(spark, conf.n))
 
+  private val Options = Seq("--work-dir", "--n", "--seed", "--format",
+    "--resume", "--broadcast-dict", "--run-id", "--patch-dir")
+
+  /** The main's `--option value` pairs as a Conf plus the optional curated
+    * patch table dir (parquet with repo, path, patch, desc); throws
+    * IllegalArgumentException naming an unknown option, a trailing option
+    * without a value, or a malformed value. */
+  def confFromArgs(args: Seq[String]): (Conf, Option[String]) = {
+    val opts = args.grouped(2).map {
+      case k +: _ if !Options.contains(k) =>
+        throw new IllegalArgumentException(s"unknown option $k")
+      case Seq(k) => throw new IllegalArgumentException(s"option $k has no value")
+      case Seq(k, v) => k -> v
+    }.toMap
+    def opt[T](k: String, default: T)(parse: String => T): T =
+      opts.get(k).fold(default) { v =>
+        try parse(v) catch { case _: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"bad value for $k: $v") }
+      }
+    val d = Conf(workDir = opts.getOrElse("--work-dir", "/tmp/graft-kg"))
+    (d.copy(
+      n = opt("--n", d.n)(_.toLong),
+      seed = opt("--seed", d.seed)(_.toLong),
+      format = opts.getOrElse("--format", d.format),
+      resume = opt("--resume", d.resume)(_.toBoolean),
+      broadcastDict = opt("--broadcast-dict", d.broadcastDict)(_.toBoolean),
+      runId = opts.getOrElse("--run-id", d.runId)), opts.get("--patch-dir"))
+  }
+
   def main(args: Array[String]): Unit = {
-    val opts = args.grouped(2).collect { case Array(k, v) => k -> v }.toMap
-    val conf = Conf(
-      workDir = opts.getOrElse("--work-dir", "/tmp/graft-kg"),
-      n = opts.getOrElse("--n", "1000").toLong,
-      seed = opts.getOrElse("--seed", "42").toLong,
-      format = opts.getOrElse("--format", "parquet"),
-      resume = opts.getOrElse("--resume", "false").toBoolean,
-      broadcastDict = opts.getOrElse("--broadcast-dict", "true").toBoolean,
-      salt = opts.getOrElse("--salt", "8").toInt,
-      runId = opts.getOrElse("--run-id", "run0"))
-    // optional curated patch table: parquet with (repo, path, patch, desc)
-    val patchDir = opts.get("--patch-dir")
+    val (conf, patchDir) = try confFromArgs(args.toSeq) catch {
+      case e: IllegalArgumentException =>
+        System.err.println(s"${e.getMessage}\nusage: KgPipeline " +
+          Options.map(o => s"[$o <value>]").mkString(" "))
+        sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       .appName("graft-kg-pipeline")
       .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

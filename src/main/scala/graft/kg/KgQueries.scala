@@ -84,14 +84,6 @@ object KgQueries {
   /** Facet SELECT (facet_query, documentrepository.py:2293-2383):
     * `SELECT ?uri ?title ?publisher ?issued ?category WHERE { ?uri a rfc:* .
     * OPTIONAL ... }` as filter + pivot-by-join over the triple table. */
-  /** One facet column: per-subject deterministic pick (min) of a
-    * predicate's objects — the selection rule the pivot AND the csv
-    * inventory share (one definition so they can never diverge). */
-  private def facetCol(tr: DataFrame, pred: String, name: String): DataFrame =
-    tr.filter(col("pred") === pred)
-      .groupBy(col("subj").as("uri"))
-      .agg(min(col("obj")).as(name))
-
   /** The pivot subtree feeds every search/toc/feed/stats query, several of
     * which reference it 2-4x within one DAG (ranking offsets, dimension
     * unions). The former typed-filter + 4 facetCol joins + dedup + sort

@@ -8,8 +8,6 @@ package graft.model
   *    reference (e.g. /root/reference/ferenda/decorators.py:203-227).
   *  - Mention     = one detected citation span, cf. CitationParser
   *    (/root/reference/ferenda/citationparser.py:65-96).
-  *  - Lineage     = per-(partition,stage) processing record, cf. DocumentEntry
-  *    (/root/reference/ferenda/documententry.py:41-104).
   */
 final case class SourceFile(
     repo: String,
@@ -178,17 +176,3 @@ final case class Mention(
       * the reference attaches reference triples to the nearest element with
       * an `about` URI (citationparser.py:98-165 LinkSubject rewrite). */
     subjUri: String)
-
-/** Per-(stage, partition) lineage + metrics record — the north_rule's
-  * resumability unit. Mirrors DocumentEntry status maps
-  * (/root/reference/ferenda/documententry.py:266-342). */
-final case class Lineage(
-    stage: String,
-    partitionKey: String, // e.g. s"$repo/$lang"
-    inputRows: Long,
-    outputRows: Long,
-    contentSha256Xor: String, // order-independent XOR fold of row sha256s
-    durationSec: Double,
-    success: Boolean,
-    error: Option[String],
-    runId: String)

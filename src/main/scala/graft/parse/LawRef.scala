@@ -125,9 +125,6 @@ object LawRef {
     * "4 a §") — the EBNF's `?-' §'` item guard. */
   private val NumIsSection = re(
     "[0-9]+(?:\\s+[a-n](?![\\p{L}0-9]))?\\s+§")
-  /** LawRefID (lagrum.ebnf): year:number with the archaic page suffix
-    * ("1736:0123 s. 2"). */
-  private val SfsId = re("([0-9]{4}:[0-9]+(?:\\s+s\\.?\\s*[0-9]+)?)")
   private val SfsNr = re("\\(\\s*([0-9]{4}:[0-9]+(?:\\s+s\\.?\\s*[0-9]+)?)\\s*\\)")
   /** Word carrying a law-name suffix STRICTLY inside it (re_escape_named,
     * legalref.py:85-86: at least one word char before the suffix), OR a

@@ -772,8 +772,4 @@ final class OfftryckParser(
 
   def parse(tokens: Iterator[OTok]): TreeNode =
     new FsmParser[OTok](config, tokens).parse()
-
-  /** Printed number of the LAST pagebreak this parser saw (for the
-    * caller's next-segment pageno bookkeeping, parse_body:512-517). */
-  def lastPageNumber: Option[String] = Option(page).map(_.number)
 }

@@ -127,7 +127,6 @@ object RfcParser {
       attrs = Vector("title" -> "(Abstract)")))))
 
   private val multiSpaceRe = java.util.regex.Pattern.compile("  +")
-  private val wsRe = java.util.regex.Pattern.compile("\\s+")
 
   private def skipPagebreak = Constructor[String]("skip_pagebreak", pushesState = false, { p =>
     val chunk = p.reader.next()
@@ -168,7 +167,8 @@ object RfcParser {
   /** The document's basefile, bound for the duration of one parse() call
     * (thread-confined — one FsmParser per task thread). Keeping it out of
     * the constructor closures lets the whole FSM config be built ONCE per
-    * JVM instead of once per document. */
+    * JVM instead of once per document. Set and read on the parsing
+    * thread only: parse() is its one writer. */
   private val tlBasefile = new ThreadLocal[String] {
     override def initialValue(): String = "0"
   }
@@ -260,11 +260,6 @@ object RfcParser {
       else boldRe.matcher(text).replaceAll("")
     blankLineRe.split(clean, -1).iterator
       .map(_.dropWhile(_ == '\n')).filter(_.nonEmpty)
-  }
-
-  def config(basefile: String = "0"): Config[String] = {
-    tlBasefile.set(basefile)
-    staticConfig
   }
 
   /** Parse one RFC-shaped document into its element tree. */

@@ -282,6 +282,26 @@ class KgSpec extends AnyFunSuite with BeforeAndAfterAll {
     parsed.unpersist()
   }
 
+  test("confFromArgs parses every option and rejects malformed arguments") {
+    val (conf, patchDir) = KgPipeline.confFromArgs(Seq(
+      "--work-dir", "/w", "--n", "500", "--seed", "7", "--format", "orc",
+      "--resume", "true", "--broadcast-dict", "false", "--run-id", "r9",
+      "--patch-dir", "/p"))
+    assert(conf == KgPipeline.Conf(workDir = "/w", n = 500, seed = 7L,
+      format = "orc", resume = true, broadcastDict = false, runId = "r9"))
+    assert(patchDir.contains("/p"))
+    assert(KgPipeline.confFromArgs(Nil) ==
+      (KgPipeline.Conf(workDir = "/tmp/graft-kg"), None))
+    for ((args, named) <- Seq(
+        Seq("--resum", "true") -> "--resum",
+        Seq("--seed", "1", "--n") -> "--n",
+        Seq("--salt", "8") -> "--salt",
+        Seq("--n", "many") -> "--n")) {
+      val e = intercept[IllegalArgumentException](KgPipeline.confFromArgs(args))
+      assert(e.getMessage.contains(named), e.getMessage)
+    }
+  }
+
   test("fuzzy upgrade links typo'd publisher literals at ratio >= 0.8") {
     import spark.implicits._
     val g = "g"
