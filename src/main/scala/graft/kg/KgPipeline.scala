@@ -1,7 +1,7 @@
 package graft.kg
 
 import graft.model.{SourceFile, Triple, Vocab}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end KG-construction pipeline driver (the spark-submit entry the
@@ -25,6 +25,12 @@ object KgPipeline {
       broadcastDict: Boolean = true,
       runId: String = "run0")
 
+  /** What one run wrote. Every count is the rows THIS run wrote, observed
+    * on the write that produced the table. In a resume run `parsedRows`,
+    * `failedRows` and `mentionCount` therefore count the appended rows, and
+    * `inputRows` (= parsedRows + failedRows) the pending rows;
+    * `tripleCount` and `linkCount` count the whole tables, which every run
+    * rewrites. */
   final case class Summary(
       inputRows: Long,
       parsedRows: Long,
@@ -61,21 +67,35 @@ object KgPipeline {
     docTruth.union(spark.createDataset(aliasTruth))
   }
 
-  /** Component representative: prefer the MINTED forms — canonical /rfc/
-    * URIs and this engine's own /sfs/ space (a law's rinfo owl:sameAs
-    * equivalent must fold INTO the minted act URI, not absorb it) — else
-    * lexicographic min. Output only rows that actually change
-    * (uri != canon) to keep the rewrite broadcast small.
+  /** Stage C: the canonical map (uri, canon) over undirected sameAs
+    * `edges` (src, dst). Component representative: prefer the MINTED forms
+    * — canonical /rfc/ URIs and this engine's own /sfs/ space (a law's rinfo
+    * owl:sameAs equivalent must fold INTO the minted act URI, not absorb
+    * it) — else lexicographic min. Only rows that actually change
+    * (uri != canon) are output, to keep the rewrite broadcast small.
     *
-    * Fast path: the CC output only holds ALIASED vertices (tiny relative
-    * to the corpus), so below the same driver byte budget the CC itself
-    * uses, the rep pick runs driver-side — one collect instead of a
-    * groupBy + join + filter job chain (the chain is driver-serial fixed
-    * cost at bench scale). Above budget the distributed shape is
-    * unchanged. Both paths produce identical rows (asserted in KgSpec). */
+    * ONE driver byte gate for CC + rep pick: below `localByteBudget` the
+    * whole stage runs driver-side off a single collect (union-find, then
+    * canonMapLocal) instead of gating CC and the rep pick separately — each
+    * gate is driver-serial job latency. Above the budget: the distributed
+    * CC and rep pick. Both paths produce identical rows (asserted in
+    * KgSpec). */
+  def canonFromEdges(edges: DataFrame,
+                     localByteBudget: Long = Cc.LocalByteBudget): DataFrame = {
+    val e0 = edges.toDF("src", "dst").filter(col("src") =!= col("dst"))
+      .persist()
+    try {
+      if (Cc.fitsDriverBudget(e0, "src", "dst", localByteBudget)) {
+        val pairs = e0.collect().map(r => (r.getString(0), r.getString(1)))
+        Cc.parallelizePairs(edges.sparkSession,
+          canonMapLocal(Cc.localComponentPairs(pairs)))
+      } else canonMap(Cc.distributedComponents(e0))
+    } finally e0.unpersist(blocking = false)
+  }
+
   /** Driver-side rep pick over (uri, minLabelComp) pairs — the exact
-    * semantics of the distributed branch below (rank tier, then min
-    * string; identity rows dropped). */
+    * semantics of canonMap (rank tier, then min string; identity rows
+    * dropped). */
   def canonMapLocal(rows: Seq[(String, String)]): Seq[(String, String)] = {
     def rk(uri: String): Int =
       if (uri.contains("/rfc/") ||
@@ -86,24 +106,35 @@ object KgPipeline {
     rows.collect { case (uri, comp) if rep(comp) != uri => (uri, rep(comp)) }
   }
 
-  def canonMap(cc: DataFrame,
-               localByteBudget: Long = Cc.LocalByteBudget): DataFrame = {
-    val spark = cc.sparkSession
-    if (Cc.fitsDriverBudget(cc, "uri", "canon", localByteBudget)) {
-      import spark.implicits._
-      val rows = cc.select("uri", "canon").as[(String, String)].collect()
-      Cc.parallelizePairs(spark, canonMapLocal(rows.toSeq))
-    } else {
-      val ranked = cc.withColumn("rk",
-        when(col("uri").contains("/rfc/") ||
-          col("uri").startsWith(s"${EntityDict.base}/sfs/"), lit(0))
-          .otherwise(lit(1)))
-      ranked.groupBy(col("canon").as("comp"))
-        .agg(min(struct(col("rk"), col("uri"))).as("rep"))
-        .select(col("comp"), col("rep.uri").as("repUri"))
-        .join(cc, col("canon") === col("comp"))
-        .select(col("uri"), col("repUri").as("canon"))
-        .filter(col("uri") =!= col("canon"))
+  /** Distributed rep pick over the CC output (uri, canon). */
+  private def canonMap(cc: DataFrame): DataFrame = {
+    val ranked = cc.withColumn("rk",
+      when(col("uri").contains("/rfc/") ||
+        col("uri").startsWith(s"${EntityDict.base}/sfs/"), lit(0))
+        .otherwise(lit(1)))
+    ranked.groupBy(col("canon").as("comp"))
+      .agg(min(struct(col("rk"), col("uri"))).as("rep"))
+      .select(col("comp"), col("rep.uri").as("repUri"))
+      .join(cc, col("canon") === col("comp"))
+      .select(col("uri"), col("repUri").as("canon"))
+      .filter(col("uri") =!= col("canon"))
+  }
+
+  /** Independent same-stage writes are submitted as CONCURRENT Spark jobs
+    * (the local scheduler interleaves their tasks): a small write's tail
+    * tasks no longer leave the rest of the cores idle. Waits for EVERY
+    * branch, then rethrows the first failing branch's error with the others
+    * suppressed — failing fast would return while sibling writes still run. */
+  private[graft] def inParallel(fs: (() => Unit)*): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val branches = fs.map(f => Future(blocking(f())))
+    val errors = branches.flatMap(b =>
+      Await.ready(b, Duration.Inf).value.get.failed.toOption)
+    errors.headOption.foreach { e =>
+      errors.tail.foreach(e.addSuppressed)
+      throw e
     }
   }
 
@@ -125,62 +156,21 @@ object KgPipeline {
       }
       r
     }
-    // Independent same-stage writes are submitted as CONCURRENT Spark jobs
-    // (local scheduler interleaves their tasks): a small write's tail tasks
-    // no longer leave the rest of the cores idle.
-    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    def inParallel(fs: (() => Unit)*): Unit =
-      Await.result(Future.sequence(fs.map(f => Future(blocking(f())))), Duration.Inf)
 
     def path(t: String) = s"$wd/$t"
-    def write(df: DataFrame, t: String, partitioned: Boolean = false): Unit = {
-      val w = df.write.mode("overwrite").format(fmt)
-      (if (partitioned) w.partitionBy("repo", "lang") else w).save(path(t))
-    }
     def read(t: String): DataFrame = spark.read.format(fmt).load(path(t))
-    // Row count of a just-written stage table. For a parquet table with a
-    // bounded file count the parquet footers carry the EXACT row counts —
-    // summing them driver-side replaces a full count() job (each count is
-    // ~constant driver-serial latency that the 4N scaling level pays
-    // disproportionately). Falls back to a distributed count() for other
-    // formats or once the file count could make driver listing itself the
-    // bottleneck (the 100 TB posture: production tables count via write
-    // metrics / manifest stats, which this stands in for).
-    def tableRowCount(t: String): Long = {
-      if (fmt != "parquet") return read(t).count()
-      try {
-        val hconf = spark.sessionState.newHadoopConf()
-        val root = new org.apache.hadoop.fs.Path(path(t))
-        val fs = root.getFileSystem(hconf)
-        val it = fs.listFiles(root, true)
-        val files = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.hadoop.fs.LocatedFileStatus]
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.getPath.getName.endsWith(".parquet")) files += f
-        }
-        if (files.size > 2048) read(t).count()
-        else {
-          // footer reads are independent metadata I/O — fan them out on a
-          // driver pool so the cost is ~constant instead of
-          // files × per-footer latency (driver-serial time is exactly
-          // what the 4N scaling level cannot amortize)
-          import scala.concurrent.{Await, ExecutionContext, Future, blocking}
-          import scala.concurrent.duration.Duration
-          implicit val ec: ExecutionContext = ExecutionContext.global
-          val sums = files.grouped(math.max(1, files.size / 16)).toSeq.map {
-            grp => Future(blocking(grp.iterator.map { f =>
-              val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-                org.apache.parquet.hadoop.util.HadoopInputFile
-                  .fromStatus(f, hconf))
-              try r.getRecordCount finally r.close()
-            }.sum))
-          }
-          Await.result(Future.sequence(sums), Duration.Inf).sum
-        }
-      } catch { case _: Exception => read(t).count() }
+    // Every stage table is written here; returns the rows this write
+    // committed, observed on the write's own result stage (Spark applies a
+    // result stage's accumulator updates once per task, so the count is
+    // exact) — no re-read of the table and no extra count job. Unnamed
+    // observations get unique names: overlapping runs cannot collide.
+    def write(df: DataFrame, t: String, mode: String,
+              partitioned: Boolean = false): Long = {
+      val rows = Observation()
+      val w = df.observe(rows, count(lit(1)).as("rows")).write.mode(mode)
+        .format(fmt)
+      (if (partitioned) w.partitionBy("repo", "lang") else w).save(path(t))
+      rows.get("rows").asInstanceOf[Long]
     }
 
     // ---- stage P (with resume: skip rows already parsed with same sha)
@@ -188,88 +178,58 @@ object KgPipeline {
       if (conf.resume && new java.io.File(s"${path("docs")}/_SUCCESS").exists())
         KgStages.pending(input, read("docs"))
       else input
-    // In a fresh run inputRows is derived from parsed+failed below — a
-    // separate count() would re-run the corpus generator for nothing. In
-    // resume mode the pending-set size IS the interesting number (how much
-    // work was actually left) and the anti-join is cheap, so count it.
-    val pendingRows =
-      if (conf.resume) timed("p0_pending_count")(toParse.count()) else -1L
+    val mode = if (conf.resume) "append" else "overwrite"
 
     // patch_if_needed before parse (documentrepository.py:1355-1404):
     // applied patches and conflicts are audited in their own stage table
-    val (parseInput, patchedCache) = patches match {
-      case None => (toParse, None)
-      case Some(pt) =>
-        val patched = KgStages.patchStage(toParse, pt).persist()
-        timed("p0_patches")(
-          patched.filter(col("patchDesc").isNotNull ||
-              col("patchError").isNotNull)
-            .select("repo", "path", "patchDesc", "patchError")
-            .write.mode(if (conf.resume) "append" else "overwrite")
-            .format(fmt).save(path("patches")))
-        (patched.map(_.toSourceFile), Some(patched))
-    }
-
-    val parsed = KgStages.parseStage(parseInput)
+    val patched = patches.map(pt => KgStages.patchStage(toParse, pt).persist())
     // persist the exploded outputs; ParseOut itself is transient
-    val parsedPersisted = parsed.persist()
-    val mode = if (conf.resume) "append" else "overwrite"
-    def writeMode(df: DataFrame, t: String, partitioned: Boolean = false): Unit = {
-      val w = df.write.mode(mode).format(fmt)
-      (if (partitioned) w.partitionBy("repo", "lang") else w).save(path(t))
-    }
-    // first write materializes the persisted ParseOut; everything else in
-    // stage P (remaining tables + lineage-after-docs, write-audit-publish
-    // order preserved: lineage only reads the already-committed docs table)
-    // runs as concurrent jobs against the cache
-    timed("p1_parse_docs")(writeMode(KgStages.docsDf(parsedPersisted), "docs"))
-    // The C stage depends only on the doc_triples table (p2), so it
-    // launches AS SOON AS that commit lands, overlapping the p3/p5 tail
-    // instead of waiting for the whole P wave — its driver-serial pieces
-    // (the local CC/canon solve) back-fill cores the P tail leaves idle.
-    var parsedRows = 0L
+    val parsed = KgStages.parseStage(
+      patched.fold(toParse)(_.map(_.toSourceFile))).persist()
     var failedRows = 0L
-    inParallel(
-      () => {
-        timed("p2_doc_triples")(writeMode(KgStages.docTriplesDf(parsedPersisted), "doc_triples"))
-        timed("c1_cc") {
-          // curated edges + the parse-minted owl:sameAs equivalents
-          val allEdges = sameAs.toDF("src", "dst").unionByName(
-            read("doc_triples").filter(col("pred") === Vocab.OWL_SAMEAS &&
-                !col("objIsLiteral"))
-              .select(col("subj").as("src"), col("obj").as("dst")))
-          // ONE driver gate for CC + canon: below the byte budget the
-          // whole C stage runs driver-side off a single collect (4 Spark
-          // jobs: probe ×2, collect, canon write) instead of gating CC
-          // and canon separately (7-8 jobs of driver-serial latency —
-          // the 4N level's scaling killer). Above budget: the unchanged
-          // distributed path.
-          val e0 = allEdges.toDF("src", "dst")
-            .filter(col("src") =!= col("dst")).persist()
-          try {
-            val canonDf =
-              if (Cc.fitsDriverBudget(e0, "src", "dst", Cc.LocalByteBudget)) {
-                val pairs = e0.collect().map(r => (r.getString(0), r.getString(1)))
-                Cc.parallelizePairs(spark,
-                  canonMapLocal(Cc.localComponentPairs(pairs)))
-              } else canonMap(Cc.distributedComponents(e0))
-            write(canonDf, "canon")
-          } finally e0.unpersist(blocking = false)
-        }
-      },
-      () => timed("p3_mentions")(writeMode(KgStages.mentionsDf(parsedPersisted), "mentions")),
-      () => timed("p4_failures")(writeMode(KgStages.failuresDf(parsedPersisted), "failures")),
-      () => timed("p5_lineage")(KgStages.lineageDf(read("docs"), "parse", conf.runId)
-        .write.mode("append").format(fmt).save(path("lineage"))))
-    parsedPersisted.unpersist()
-    patchedCache.foreach(_.unpersist())
+    var mentionCount = 0L
+    val parsedRows = try {
+      patched.foreach(p => timed("p0_patches")(write(
+        p.filter(col("patchDesc").isNotNull || col("patchError").isNotNull)
+          .select("repo", "path", "patchDesc", "patchError"), "patches", mode)))
+      // first write materializes the persisted ParseOut; everything else in
+      // stage P (remaining tables + lineage-after-docs, write-audit-publish
+      // order preserved: lineage only reads the already-committed docs
+      // table) runs as concurrent jobs against the cache
+      val docsRows = timed("p1_parse_docs")(
+        write(KgStages.docsDf(parsed), "docs", mode))
+      // The C stage depends only on the doc_triples table (p2), so it
+      // launches AS SOON AS that commit lands, overlapping the p3/p5 tail
+      // instead of waiting for the whole P wave — its driver-serial pieces
+      // (the local CC/canon solve) back-fill cores the P tail leaves idle.
+      inParallel(
+        () => {
+          timed("p2_doc_triples")(
+            write(KgStages.docTriplesDf(parsed), "doc_triples", mode))
+          timed("c1_cc") {
+            // curated edges + the parse-minted owl:sameAs equivalents
+            val allEdges = sameAs.toDF("src", "dst").unionByName(
+              read("doc_triples").filter(col("pred") === Vocab.OWL_SAMEAS &&
+                  !col("objIsLiteral"))
+                .select(col("subj").as("src"), col("obj").as("dst")))
+            write(canonFromEdges(allEdges), "canon", "overwrite")
+          }
+        },
+        () => mentionCount = timed("p3_mentions")(
+          write(KgStages.mentionsDf(parsed), "mentions", mode)),
+        () => failedRows = timed("p4_failures")(
+          write(KgStages.failuresDf(parsed), "failures", mode)),
+        () => timed("p5_lineage")(write(
+          KgStages.lineageDf(read("docs"), "parse", conf.runId),
+          "lineage", "append")))
+      docsRows
+    } finally {
+      parsed.unpersist()
+      patched.foreach(_.unpersist())
+    }
 
     val docTriples0 = read("doc_triples")
     val mentions = read("mentions")
-    // counts are parquet-footer sums (sub-second) — after the wave so the
-    // failures table exists
-    parsedRows = timed("p6_counts")(tableRowCount("docs"))
-    failedRows = timed("p6_counts")(tableRowCount("failures"))
     // fuzzy label upgrade of publisher literals (ratio >= 0.8)
     val docTriples = KgStages.fuzzyUpgrade(docTriples0,
       EntityDict.publishers, Seq(Vocab.dcterms("publisher")))
@@ -282,45 +242,38 @@ object KgPipeline {
     // of the full joined cache. deps/skeleton do not feed materialize, so
     // they run concurrently with the m1 write and back-fill its serial
     // phases (output commit, stage tails).
+    var linkCount = 0L
+    var tripleCount = 0L
     inParallel(
       () => {
-        timed("l1_link_triples")(write(KgStages.linkTriplesDf(mentions), "link_triples"))
+        linkCount = timed("l1_link_triples")(write(
+          KgStages.linkTriplesDf(mentions), "link_triples", "overwrite"))
         val finalTriples = KgStages.materialize(
           docTriples, read("link_triples"), curated, read("canon"))
-        timed("m1_materialize")(write(finalTriples, "triples", partitioned = true))
+        tripleCount = timed("m1_materialize")(
+          write(finalTriples, "triples", "overwrite", partitioned = true))
       },
       () => {
         val dict = KgStages.entityDictionary(docTriples0)
         timed("l2_deps")(write(
           KgStages.depsFromMentions(mentions, dict,
-            broadcastDict = conf.broadcastDict), "deps"))
+            broadcastDict = conf.broadcastDict), "deps", "overwrite"))
         timed("l3_skeleton")(write(KgStages.skeletonFromMentions(mentions,
           read("deps").select(col("target")),
-          broadcastDict = conf.broadcastDict), "skeleton"))
+          broadcastDict = conf.broadcastDict), "skeleton", "overwrite"))
       })
-    val out = read("triples")
     // materialize-stage lineage fold: xxhash64, not sha2 — the fold only
     // needs order-independent stability, and crypto hashing 10^6+ triples
     // per run was a measured fixed cost (input-content sha256 stays
     // cryptographic in the parse lineage, where input_hint requires it)
-    var tripleCount = 0L
-    var mentionCount = 0L
-    var linkCount = 0L
-    // lineage-after-triples plus the summary counts are all independent
-    // reads of already-committed tables → one concurrent wave
-    inParallel(
-      () => timed("m2_lineage")(KgStages.lineageDf(
-        out.withColumn("sha256", lower(hex(xxhash64(
-          col("subj"), col("pred"), col("obj"), col("graph"))))),
-        "materialize", conf.runId)
-        .write.mode("append").format(fmt).save(path("lineage"))),
-      () => { tripleCount = timed("m3_counts")(tableRowCount("triples")) },
-      () => { mentionCount = timed("m3_counts")(tableRowCount("mentions")) },
-      () => { linkCount = timed("m3_counts")(tableRowCount("link_triples")) })
-    val inputRows =
-      if (conf.resume) pendingRows else parsedRows + failedRows
-    Summary(inputRows, parsedRows, failedRows, tripleCount, mentionCount,
-      linkCount, (System.nanoTime() - t0) / 1e9, stageSec.toMap)
+    timed("m2_lineage")(write(KgStages.lineageDf(
+      read("triples").withColumn("sha256", lower(hex(xxhash64(
+        col("subj"), col("pred"), col("obj"), col("graph"))))),
+      "materialize", conf.runId), "lineage", "append"))
+    // each pending row maps to exactly one ParseOut, which lands in either
+    // docs or failures
+    Summary(parsedRows + failedRows, parsedRows, failedRows, tripleCount,
+      mentionCount, linkCount, (System.nanoTime() - t0) / 1e9, stageSec.toMap)
   }
 
   /** Mixed-family input: n RFC text files plus n/4 markdown READMEs plus

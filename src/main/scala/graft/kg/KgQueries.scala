@@ -68,7 +68,7 @@ object KgQueries {
           .select(col("subj").as("src"), col("obj").as("dst")))
         .persist()
       val curated = KgPipeline.curatedTriples(s, N)
-      val canon = KgPipeline.canonMap(Cc.connectedComponents(sameAs)).persist()
+      val canon = KgPipeline.canonFromEdges(sameAs).persist()
       val triples = KgStages.materialize(docTriples, linkTriples, curated, canon)
         .persist()
       Ctx(docs.persist(), triples, mentions.persist(), linked, canon, sameAs,
@@ -246,7 +246,7 @@ object KgQueries {
 
   /** Canonicalization map (aliased URIs only). Oracle: DuckDB recursive-CTE
     * connected components over the dumped sameAs edges — an INDEPENDENT CC
-    * implementation checking Cc.connectedComponents. */
+    * implementation checking KgPipeline.canonFromEdges. */
   def canonMap(spark: SparkSession, dir: String): DataFrame =
     ctx(spark).canon.orderBy("uri")
 

@@ -19,7 +19,9 @@ import org.apache.spark.sql.expressions.Window
   *    broadcast; a salted shuffle variant is provided for the 10^12-file
   *    case where the dictionary itself is huge and mention keys are skewed
   *    (mega-cited entities), per north_rule.
-  *  - C is Cc.connectedComponents (O(log d) rounds, checkpointed).
+  *  - C is KgPipeline.canonFromEdges: one driver byte gate; union-find +
+  *    rep pick on the driver below it, Cc.distributedComponents (O(log d)
+  *    rounds, checkpointed) + a distributed rep pick above it.
   *  - M rewrites through the canon map (broadcast), dedups, and partitions
   *    by (repo, lang) — explicit repartition before the write so one task
   *    writes one partition directory.

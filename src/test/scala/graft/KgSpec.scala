@@ -27,6 +27,11 @@ class KgSpec extends AnyFunSuite with BeforeAndAfterAll {
     d.toString
   }
 
+  /** count() of each stage table that a Summary count reports. */
+  private def tableRows(workDir: String): Map[String, Long] =
+    Seq("docs", "failures", "mentions", "link_triples", "triples").map(t =>
+      t -> spark.read.parquet(s"$workDir/$t").count()).toMap
+
   test("corpus generation is deterministic and order-independent") {
     val a = Corpus.doc(42L, 17L, 100L)
     val b = Corpus.doc(42L, 17L, 100L)
@@ -122,13 +127,13 @@ class KgSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(viaLocal.nonEmpty)
   }
 
-  test("canonMap prefers the minted /rfc/ URI over lexicographic min") {
+  test("canonFromEdges prefers the minted /rfc/ URI over lexicographic min") {
     import spark.implicits._
     val edges = Seq(
       ("https://example.org/legacy/rfc1000", "https://example.org/rfc/1000"),
       ("https://example.org/old/ietf-doc-1000", "https://example.org/legacy/rfc1000"))
       .toDF("src", "dst")
-    val canon = KgPipeline.canonMap(Cc.connectedComponents(edges))
+    val canon = KgPipeline.canonFromEdges(edges)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(canon("https://example.org/legacy/rfc1000") == "https://example.org/rfc/1000")
     assert(canon("https://example.org/old/ietf-doc-1000") == "https://example.org/rfc/1000")
@@ -162,7 +167,7 @@ class KgSpec extends AnyFunSuite with BeforeAndAfterAll {
     linked.unpersist(); parsed.unpersist()
   }
 
-  test("canonMap: driver fast path and distributed path produce identical rows") {
+  test("canonFromEdges: driver fast path and distributed path produce identical rows") {
     import spark.implicits._
     // chains + a star, mixing minted (/rfc/) and plain URIs so the rep
     // pick exercises both rank tiers
@@ -171,10 +176,9 @@ class KgSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0 until 10).map(i =>
         (s"https://example.org/alias/b$i", s"https://example.org/alias/a$i")))
       .toDF("src", "dst")
-    val cc = Cc.connectedComponents(edges)
-    val viaLocal = KgPipeline.canonMap(cc)
+    val viaLocal = KgPipeline.canonFromEdges(edges)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val viaDist = KgPipeline.canonMap(cc, localByteBudget = 0L)
+    val viaDist = KgPipeline.canonFromEdges(edges, localByteBudget = 0L)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(viaLocal == viaDist)
     assert(viaLocal.nonEmpty)
@@ -186,6 +190,11 @@ class KgSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(s.failedRows == 0, s"parse failures: ${s.failedRows}")
     assert(s.parsedRows == 80)
     assert(s.tripleCount > 0 && s.linkCount > 0)
+    // every Summary count is the row count of the table its write produced
+    assert(s.inputRows == 80)
+    assert(tableRows(conf.workDir) == Map("docs" -> s.parsedRows,
+      "failures" -> s.failedRows, "mentions" -> s.mentionCount,
+      "link_triples" -> s.linkCount, "triples" -> s.tripleCount))
 
     val actual = spark.read.parquet(s"${conf.workDir}/triples")
     val expected = KgPipeline.groundTruth(spark, conf.n, conf.seed).toDF()
@@ -227,6 +236,76 @@ class KgSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(s2.inputRows == 0, s"resume should skip all rows, got ${s2.inputRows}")
     // triple table unchanged in content
     assert(s2.tripleCount == s1.tripleCount)
+  }
+
+  test("resume over added documents: counts are this run's writes, no count job") {
+    val wd = tmpDir()
+    val all = KgPipeline.synthesizeInput(spark, 30, 5L)
+    val keep = new scala.util.Random(5L)
+      .shuffle(all.collect().map(_.path).toSeq).take(20).toSet
+    val conf = KgPipeline.Conf(workDir = wd, n = 30, seed = 5L)
+    def run(input: org.apache.spark.sql.Dataset[graft.model.SourceFile],
+            c: KgPipeline.Conf) = KgPipeline.run(spark, c, input,
+      KgPipeline.sameAsEdges(spark, 30), KgPipeline.curatedTriples(spark, 30))
+    val s1 = run(all.filter(f => keep(f.path)), conf)
+    assert(s1.inputRows == 20)
+    val before = tableRows(wd)
+
+    // record the call site of every job (its result stage's name) and of
+    // every SQL action (its description: under AQE a Dataset action's jobs
+    // are submitted from a stage-materialization thread and carry that
+    // thread's call site instead); a marker job flushes the listener queue
+    // (events reach one listener in order), so no start event is missed
+    val callSites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("graft.marker") != null) flushed.countDown()
+        else callSites.add(e.stageInfos.maxBy(_.stageId).name)
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case q: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          callSites.add(q.description)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val s2 = try {
+      val s = run(all, conf.copy(resume = true, runId = "run1"))
+      spark.sparkContext.setLocalProperty("graft.marker", "end")
+      spark.range(1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      s
+    } finally {
+      spark.sparkContext.setLocalProperty("graft.marker", null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val after = tableRows(wd)
+    assert(s2.inputRows == s2.parsedRows + s2.failedRows)
+    assert(s2.inputRows == 30 - before("docs"), "pending = documents not in docs")
+    assert(s2.parsedRows == after("docs") - before("docs"))
+    assert(s2.failedRows == after("failures") - before("failures"))
+    assert(s2.mentionCount == after("mentions") - before("mentions"))
+    assert(s2.tripleCount == after("triples"))
+    assert(s2.linkCount == after("link_triples"))
+    import scala.jdk.CollectionConverters._
+    val countJobs = callSites.asScala
+      .filter(_.startsWith("count at KgPipeline.scala:"))
+    assert(countJobs.isEmpty, s"count jobs in the resume run: $countJobs")
+    assert(callSites.asScala.exists(_.startsWith("save at KgPipeline.scala:")))
+  }
+
+  test("inParallel waits for every branch before rethrowing the first failure") {
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException](KgPipeline.inParallel(
+      () => { started.await(); throw new IllegalStateException("boom") },
+      () => { started.countDown(); Thread.sleep(500); slowDone.set(true) },
+      () => throw new IllegalArgumentException("second")))
+    assert(slowDone.get, "returned while a sibling branch was still running")
+    assert(e.getMessage == "boom")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
   }
 
   test("fuzz: arbitrary text never crashes the parse stage (parse or fail-capture)") {
