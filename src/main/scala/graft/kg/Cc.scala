@@ -47,25 +47,23 @@ object Cc {
     * floor. Bounds the count probe so it never scans past the answer. */
   private def rowCeil(budget: Long): Long = math.max(0L, budget / 16)
 
-  /** Estimated driver-heap bytes to collect two string columns of `df`:
-    * None if the row count alone busts the budget's row ceiling (the
-    * count probe is limit-bounded — it never scans the full table);
-    * otherwise count × (UTF-16 payload from a bounded width sample +
-    * ~112 B per-row JVM overhead: 2 String headers + char arrays ≈ 96 B,
-    * tuple ≈ 16 B). Deliberately conservative — over-estimates flip to
-    * the distributed path, which is always correct. */
+  /** Estimated driver-heap bytes to collect two string columns of `df`,
+    * from ONE limit-bounded query (it never scans past the row ceiling):
+    * None if the probed rows bust the budget's row ceiling; otherwise
+    * their exact UTF-16 payload + ~112 B per-row JVM overhead (2 String
+    * headers + char arrays ≈ 96 B, tuple ≈ 16 B). The width is projected
+    * before the limit, so the limit's shuffle carries one int per row.
+    * Deliberately conservative — over-estimates flip to the distributed
+    * path, which is always correct. */
   def estimatedCollectBytes(df: DataFrame, c1: String, c2: String,
                             budget: Long): Option[Long] = {
     val ceil = rowCeil(budget)
     val probe = math.min(ceil + 1, Int.MaxValue.toLong).toInt
-    val cnt = df.limit(probe).count()
+    val r = df.select((length(col(c1)) + length(col(c2))).as("w"))
+      .limit(probe).agg(count(lit(1)), sum("w")).first()
+    val cnt = r.getLong(0)
     if (cnt > ceil) None
-    else if (cnt == 0) Some(0L)
-    else {
-      val avgChars = df.limit(10000)
-        .agg(avg(length(col(c1)) + length(col(c2)))).first().getDouble(0)
-      Some((cnt * (avgChars * 2 + 112)).toLong)
-    }
+    else Some(cnt * 112 + (if (r.isNullAt(1)) 0L else r.getLong(1) * 2))
   }
 
   /** True when collecting (c1, c2) of `df` fits the driver byte budget. */
@@ -79,16 +77,15 @@ object Cc {
     * coalesce). */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
                           localByteBudget: Long = LocalByteBudget): DataFrame = {
-    // persist the filtered edge set: the byte-budget probe (limit-count +
-    // width sample) and the chosen path's own consumption would otherwise
-    // re-evaluate the upstream union/scan three times (guide §5 caching:
-    // reused AND expensive to recompute — the edge source is typically a
-    // full scan of the doc-triples table)
+    // persist the filtered edge set: the byte-budget probe and the chosen
+    // path both consume it, and the edge source is typically a full scan
+    // of the doc-triples table (guide §5: reused AND expensive to recompute)
     val e0 = edges.toDF("src", "dst").filter(col("src") =!= col("dst"))
       .persist()
     try {
       if (fitsDriverBudget(e0, "src", "dst", localByteBudget))
-        localComponents(e0)
+        parallelizePairs(e0.sparkSession, localComponentPairs(
+          e0.collect().map(r => (r.getString(0), r.getString(1)))))
       else distributedComponents(e0, maxIter)
     } finally e0.unpersist(blocking = false)
   }
@@ -134,11 +131,6 @@ object Cc {
     val parts = math.max(1, math.min(256, rows.size / 5000 + 1))
     spark.createDataset(
       spark.sparkContext.parallelize(rows, parts)).toDF("uri", "canon")
-  }
-
-  def localComponents(e: DataFrame): DataFrame = {
-    val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
-    parallelizePairs(e.sparkSession, localComponentPairs(pairs))
   }
 
   /** Distributed min-label propagation with pointer jumping. */

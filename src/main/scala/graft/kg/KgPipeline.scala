@@ -46,15 +46,14 @@ object KgPipeline {
 
   /** Synthesize the input table on executors — the corpus is a pure
     * function of (seed, i, n), so no driver-side materialization. */
-  def synthesizeInput(spark: SparkSession, n: Long, seed: Long,
-                      partitions: Int = 0): Dataset[SourceFile] = {
+  def synthesizeInput(spark: SparkSession, n: Long,
+                      seed: Long): Dataset[SourceFile] = {
     import spark.implicits._
     // 8x overdecomposition: parse tasks are seconds-long, and coarse
     // partitions make the stage straggler-bound (one slow task = one core
     // idle fleet). Small tasks also give AQE real statistics to work with.
-    val parts = if (partitions > 0) partitions
-      else spark.sparkContext.defaultParallelism * 8
-    spark.range(0, n, 1, parts).map(i => Corpus.doc(seed, i, n).src)
+    spark.range(0, n, 1, spark.sparkContext.defaultParallelism * 8)
+      .map(i => Corpus.doc(seed, i, n).src)
   }
 
   /** Ground-truth triples for the synthesized corpus (P/R oracle). */
@@ -220,7 +219,8 @@ object KgPipeline {
         () => failedRows = timed("p4_failures")(
           write(KgStages.failuresDf(parsed), "failures", mode)),
         () => timed("p5_lineage")(write(
-          KgStages.lineageDf(read("docs"), "parse", conf.runId),
+          KgStages.lineageDf(read("docs"), KgStages.hexKey(col("sha256")),
+            "parse", conf.runId),
           "lineage", "append")))
       docsRows
     } finally {
@@ -266,10 +266,9 @@ object KgPipeline {
     // needs order-independent stability, and crypto hashing 10^6+ triples
     // per run was a measured fixed cost (input-content sha256 stays
     // cryptographic in the parse lineage, where input_hint requires it)
-    timed("m2_lineage")(write(KgStages.lineageDf(
-      read("triples").withColumn("sha256", lower(hex(xxhash64(
-        col("subj"), col("pred"), col("obj"), col("graph"))))),
-      "materialize", conf.runId), "lineage", "append"))
+    timed("m2_lineage")(write(KgStages.lineageDf(read("triples"),
+      KgStages.longKey(xxhash64(col("subj"), col("pred"), col("obj"),
+        col("graph"))), "materialize", conf.runId), "lineage", "append"))
     // each pending row maps to exactly one ParseOut, which lands in either
     // docs or failures
     Summary(parsedRows + failedRows, parsedRows, failedRows, tripleCount,
@@ -282,29 +281,31 @@ object KgPipeline {
     * pipeline, not only in family specs, and the law family's structure
     * sub-resources (#K..P.. sections, SfsParser) flow through linking,
     * deps and the annotations isPartOf closure alongside rfc #S sections.
-    * Executor-generated like synthesizeInput. */
+    * Executor-generated from ONE range, each global index mapped to
+    * (family, local index) by prefix sums. Partitions are sized to the
+    * data: the query context parses ~375 of these at ~1 ms each, so a
+    * partition per family per core (1-6 documents each) would spend more
+    * task CPU deserializing than parsing. */
   def synthesizeMixedInput(spark: SparkSession, n: Long,
                            seed: Long): Dataset[SourceFile] = {
     import spark.implicits._
-    val par = spark.sparkContext.defaultParallelism
-    val rfc = spark.range(0, n, 1, par * 8).map(i => Corpus.doc(seed, i, n).src)
-    val md = spark.range(0, n / 4, 1, par)
-      .map(i => Corpus.mdDoc(seed, i, n).src)
-    val html = spark.range(0, n / 4, 1, par)
-      .map(i => Corpus.htmlDoc(seed, i, n).src)
-    val law = spark.range(0, n / 4, 1, par)
-      .map(i => Corpus.lawDoc(seed, i, n / 4).src)
-    val dv = spark.range(0, n / 8, 1, par)
-      .map(i => Corpus.dvDoc(seed, i, n / 8, n / 4).src)
-    val w3c = spark.range(0, n / 8, 1, par)
-      .map(i => Corpus.w3cDoc(seed, i).src)
-    val wiki = spark
-      .range(0, Corpus.wikiCategoryLabels.length.toLong, 1, par)
-      .map(i => Corpus.wikiDoc(i).src)
-    val eu = spark.range(0, Corpus.EuActN.toLong, 1, par)
-      .map(i => Corpus.euDoc(i).src)
-    rfc.union(md).union(html).union(law).union(dv).union(w3c)
-      .union(wiki).union(eu)
+    val families: Array[(Long, Long => SourceFile)] = Array(
+      (n, i => Corpus.doc(seed, i, n).src),
+      (n / 4, i => Corpus.mdDoc(seed, i, n).src),
+      (n / 4, i => Corpus.htmlDoc(seed, i, n).src),
+      (n / 4, i => Corpus.lawDoc(seed, i, n / 4).src),
+      (n / 8, i => Corpus.dvDoc(seed, i, n / 8, n / 4).src),
+      (n / 8, i => Corpus.w3cDoc(seed, i).src),
+      (Corpus.wikiCategoryLabels.length.toLong, i => Corpus.wikiDoc(i).src),
+      (Corpus.EuActN.toLong, i => Corpus.euDoc(i).src))
+    val starts = families.scanLeft(0L)(_ + _._1)
+    spark.range(0, starts.last, 1, 2 * spark.sparkContext.defaultParallelism)
+      .map { g =>
+        // the last family starting at or before g (empty families share
+        // their successor's start and are skipped)
+        val f = starts.indexWhere(_ > g) - 1
+        families(f)._2(g - starts(f))
+      }
   }
 
   /** Swedish-law corpus (the LawRef family), executor-generated like the

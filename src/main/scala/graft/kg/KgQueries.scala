@@ -133,7 +133,7 @@ object KgQueries {
 
   /** Transitive closure of (child, parent) edges. The driver fast path is
     * gated on the SAME byte budget as Cc.LocalByteBudget (estimated
-    * collect size from a bounded count + width sample, VERDICT r3 "What's
+    * collect size from one limit-bounded query, VERDICT r3 "What's
     * wrong" #2): the iterative loop is ~5 driver-serial jobs per round —
     * pure fixed cost on a part-of forest that is tiny relative to the
     * corpus; above budget the distributed fixpoint below takes over
@@ -157,10 +157,7 @@ object KgQueries {
           }
         }
       }
-      val rows = out.result()
-      val parts = math.max(1, math.min(256, rows.size / 5000 + 1))
-      spark.createDataset(
-        spark.sparkContext.parallelize(rows, parts)).toDF("child", "parent")
+      Cc.parallelizePairs(spark, out.result()).toDF("child", "parent")
     } else {
       // Path-doubling fixpoint (closure ⋈ closure, not closure ⋈ edges):
       // covered depth doubles each round, so maxIter=64 reaches 2^64 —
@@ -329,7 +326,8 @@ object KgQueries {
   /** Per-partition lineage metrics of the parse stage (north_rule:
     * per-partition lineage + metrics). */
   def lineage(spark: SparkSession, dir: String): DataFrame =
-    KgStages.lineageDf(ctx(spark).docs, "parse", "verify")
+    KgStages.lineageDf(ctx(spark).docs, KgStages.hexKey(col("sha256")),
+      "parse", "verify")
       .drop("committedAt")
       .orderBy("repo", "lang")
 

@@ -2,7 +2,7 @@ package graft.kg
 
 import graft.model.{Mention, SourceFile, Triple, Vocab}
 import graft.parse.RfcDoc
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -354,19 +354,28 @@ object KgStages {
 
   // ------------------------------------------------------------ lineage
   /** Per-(stage, repo, lang) lineage + metrics row (north_rule). The
-    * sha256 fold is a bit_xor of the leading 60 bits of each row's content
-    * hash — order-independent, so two runs over the same partition agree
-    * regardless of row order. */
-  def lineageDf(docs: DataFrame, stage: String, runId: String): DataFrame =
-    docs.groupBy(col("repo"), col("lang"))
+    * content fold is a bit_xor of `key`, each row's 60-bit content key
+    * ([[hexKey]] or [[longKey]]) — order-independent, so two runs over the
+    * same partition agree regardless of row order. */
+  def lineageDf(rows: DataFrame, key: Column, stage: String,
+                runId: String): DataFrame =
+    rows.groupBy(col("repo"), col("lang"))
       .agg(
         count(lit(1)).as("outputRows"),
-        format_string("%015x",
-          bit_xor(conv(substring(col("sha256"), 1, 15), 16, 10).cast("long")))
-          .as("contentSha256Xor"))
+        format_string("%015x", bit_xor(key)).as("contentSha256Xor"))
       .withColumn("stage", lit(stage))
       .withColumn("runId", lit(runId))
       .withColumn("committedAt", current_timestamp())
+
+  /** The lineage key of a hex digest: its leading 15 hex digits. */
+  def hexKey(hexDigest: Column): Column =
+    conv(substring(hexDigest, 1, 15), 16, 10).cast("long")
+
+  /** hexKey(hex(v)) of a long, without the string round trip: hex of a
+    * long has no leading zeros, so its first 15 digits are all of v below
+    * 2^60 and v >>> 4 from there on (negative v included). */
+  def longKey(v: Column): Column =
+    when(shiftrightunsigned(v, 60) === 0, v).otherwise(shiftrightunsigned(v, 4))
 
   /** Resumability (the reference's `needed` predicate,
     * documentstore.py:400-470): rows of `input` not yet present in the

@@ -172,9 +172,8 @@ object TextOps {
     * numeric min per component, independent of Cc's string labels. */
   def dedupApply(spark: SparkSession, dir: String,
                  threshold: Double = 0.8): DataFrame = {
-    // persist the pair table: Cc's size-gate probes (bounded count, row
-    // width) plus its collect would otherwise re-run the full inverted-
-    // index pair scan once per action (measured 3x the scan cost)
+    // persist the pair table: Cc's size-gate probe plus its collect would
+    // otherwise re-run the full inverted-index pair scan once per action
     val pairs = memoTrack(s"dedupPairs:$threshold", spark, dir)(
       ngramJaccardPairs(spark, dir, threshold)
         .select(col("doc_a").cast("string").as("src"),

@@ -226,4 +226,37 @@ class KgQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(fields(2).startsWith("rfc:") || fields(2).startsWith("rpubl:"))
     }
   }
+
+  test("ctx build budget: at most 64 tasks and 4 jobs at local[4]") {
+    // every job and task of one fresh session's context build; a marker
+    // job flushes the listener queue (events reach one listener in order)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var atMarker = (0, 0)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("graft.marker") != null) {
+          atMarker = (jobs.get, tasks.get)
+          flushed.countDown()
+        } else jobs.incrementAndGet()
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        tasks.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      KgQueries.ctx(spark.newSession())
+      spark.sparkContext.setLocalProperty("graft.marker", "end")
+      spark.range(1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      spark.sparkContext.setLocalProperty("graft.marker", null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val (nJobs, nTasks) = atMarker
+    assert(nJobs > 0 && nJobs <= 4, s"$nJobs jobs, $nTasks tasks")
+    assert(nTasks <= 64, s"$nJobs jobs, $nTasks tasks")
+  }
 }

@@ -41,6 +41,40 @@ class KgSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Corpus.doc(42L, 18L, 100L).src.content != a.src.content)
   }
 
+  test("mixed corpus: one range yields the former 8-way union's documents") {
+    import spark.implicits._
+    val par = spark.sparkContext.defaultParallelism
+    // the former formulation, kept as the reference
+    def union(n: Long, seed: Long) = {
+      val rfc = spark.range(0, n, 1, par * 8).map(i => Corpus.doc(seed, i, n).src)
+      val md = spark.range(0, n / 4, 1, par)
+        .map(i => Corpus.mdDoc(seed, i, n).src)
+      val html = spark.range(0, n / 4, 1, par)
+        .map(i => Corpus.htmlDoc(seed, i, n).src)
+      val law = spark.range(0, n / 4, 1, par)
+        .map(i => Corpus.lawDoc(seed, i, n / 4).src)
+      val dv = spark.range(0, n / 8, 1, par)
+        .map(i => Corpus.dvDoc(seed, i, n / 8, n / 4).src)
+      val w3c = spark.range(0, n / 8, 1, par)
+        .map(i => Corpus.w3cDoc(seed, i).src)
+      val wiki = spark
+        .range(0, Corpus.wikiCategoryLabels.length.toLong, 1, par)
+        .map(i => Corpus.wikiDoc(i).src)
+      val eu = spark.range(0, Corpus.EuActN.toLong, 1, par)
+        .map(i => Corpus.euDoc(i).src)
+      rfc.union(md).union(html).union(law).union(dv).union(w3c)
+        .union(wiki).union(eu)
+    }
+    // n = 7 leaves the n / 8 families empty
+    Seq(KgQueries.N, 7L).foreach { n =>
+      val ds = KgPipeline.synthesizeMixedInput(spark, n, KgQueries.Seed)
+      assert(ds.rdd.getNumPartitions <= 2 * par)
+      val got = ds.collect().toSeq.sortBy(_.toString)
+      assert(got == union(n, KgQueries.Seed).collect().toSeq.sortBy(_.toString),
+        s"n = $n")
+    }
+  }
+
   test("every generated document parses without error") {
     spark // force init
     val docs = Corpus.gen(7L, 60)
@@ -125,6 +159,47 @@ class KgSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(viaLocal == viaDist)
     assert(viaLocal.nonEmpty)
+  }
+
+  test("the driver byte gate runs one query per call") {
+    import spark.implicits._
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    // a marker query flushes the listener queue (events arrive in order)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq("graft_marker"))
+          flushed.countDown()
+        else calls.add(f)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = calls.add(f)
+    }
+    val narrow = (0 until 500).map(i => (s"a$i", s"b$i")).toDF("src", "dst")
+    spark.listenerManager.register(listener)
+    try {
+      assert(Cc.fitsDriverBudget(narrow, "src", "dst", 256L << 10))
+      assert(!Cc.fitsDriverBudget(narrow, "src", "dst", 100 * 16))
+      assert(Cc.fitsDriverBudget(narrow.limit(0), "src", "dst", 0L))
+      spark.range(1).toDF("graft_marker").collect()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    assert(calls.size == 3, s"executions: $calls")
+  }
+
+  test("lineage longKey equals the hex-string key on edge and random longs") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(60)
+    val vs = Seq(0L, (1L << 60) - 1, 1L << 60, -1L, Long.MinValue) ++
+      Seq.fill(2000)(rnd.nextLong() >>> rnd.nextInt(64))
+    // the former m2 key: hex, lower-cased, first 15 digits, back to a long
+    val keys = vs.toDF("v").repartition(2).select(
+        conv(substring(lower(hex(col("v"))), 1, 15), 16, 10).cast("long"),
+        KgStages.longKey(col("v")))
+      .as[(Long, Long)].collect()
+    assert(keys.length == vs.length)
+    keys.foreach { case (old, key) => assert(key == old) }
   }
 
   test("canonFromEdges prefers the minted /rfc/ URI over lexicographic min") {
