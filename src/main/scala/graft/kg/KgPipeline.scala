@@ -137,8 +137,65 @@ object KgPipeline {
     }
   }
 
-  /** Run all stages over `input`. Pass `sameAsEdges`/`curated` for the
-    * canonicalization inputs (curated alias metadata, sameas.n3 role). */
+  /** The committed stage tables, plus the inputs stages C and M read
+    * uncommitted: `sameAs`, C's edges (curated ∪ parse-minted owl:sameAs);
+    * `upgraded`, doc_triples after the fuzzy publisher upgrade; `curated`. */
+  final case class Tables(docs: DataFrame, docTriples: DataFrame,
+      mentions: DataFrame, failures: DataFrame, sameAs: DataFrame,
+      canon: DataFrame, upgraded: DataFrame, curated: DataFrame,
+      linkTriples: DataFrame, triples: DataFrame, deps: DataFrame,
+      skeleton: DataFrame)
+
+  /** The stage order and wiring, shared by [[run]] and `KgQueries.ctx`.
+    * `commit(table, df)` makes `df` the named stage table and returns the
+    * DataFrame later stages read: `run` writes and reads back, the query
+    * context persists. `df` is by-name, so a commit can time the stage
+    * that builds it. `alongsideP` runs with the rest of stage P once docs
+    * is committed; `parsed` is the caller's to persist and release.
+    *
+    * C depends only on doc_triples, so it launches as soon as that commit
+    * lands and its driver-serial pieces back-fill cores the P tail leaves
+    * idle. deps and skeleton do not feed materialize, so they overlap the
+    * triples commit's serial phases (output commit, stage tails). */
+  def stages(parsed: Dataset[KgStages.ParseOut], sameAs: DataFrame,
+             curated: DataFrame, broadcastDict: Boolean = true,
+             alongsideP: DataFrame => Unit = _ => ())(
+      commit: (String, => DataFrame) => DataFrame): Tables = {
+    val docs = commit("docs", KgStages.docsDf(parsed))
+    var docTriples, mentions, failures, edges, canon: DataFrame = null
+    inParallel(
+      () => {
+        docTriples = commit("doc_triples", KgStages.docTriplesDf(parsed))
+        edges = sameAs.toDF("src", "dst").unionByName(docTriples
+          .filter(col("pred") === Vocab.OWL_SAMEAS && !col("objIsLiteral"))
+          .select(col("subj").as("src"), col("obj").as("dst")))
+        canon = commit("canon", canonFromEdges(edges))
+      },
+      () => mentions = commit("mentions", KgStages.mentionsDf(parsed)),
+      () => failures = commit("failures", KgStages.failuresDf(parsed)),
+      () => alongsideP(docs))
+    val upgraded = KgStages.fuzzyUpgrade(docTriples, EntityDict.publishers,
+      Seq(Vocab.dcterms("publisher")))
+    var linkTriples, triples, deps, skeleton: DataFrame = null
+    inParallel(
+      () => {
+        linkTriples = commit("link_triples", KgStages.linkTriplesDf(mentions))
+        triples = commit("triples",
+          KgStages.materialize(upgraded, linkTriples, curated, canon))
+      },
+      () => {
+        deps = commit("deps", KgStages.depsFromMentions(mentions,
+          KgStages.entityDictionary(docTriples), broadcastDict))
+        skeleton = commit("skeleton", KgStages.skeletonFromMentions(mentions,
+          deps.select(col("target")), broadcastDict))
+      })
+    Tables(docs, docTriples, mentions, failures, edges, canon, upgraded,
+      curated, linkTriples, triples, deps, skeleton)
+  }
+
+  /** Run all stages over `input`, each committed as a table under
+    * `conf.workDir`. Pass `sameAsEdges`/`curated` for the canonicalization
+    * inputs (curated alias metadata, sameas.n3 role). */
   def run(spark: SparkSession, conf: Conf, input: Dataset[SourceFile],
           sameAs: DataFrame, curated: DataFrame,
           patches: Option[DataFrame] = None): Summary = {
@@ -158,11 +215,11 @@ object KgPipeline {
 
     def path(t: String) = s"$wd/$t"
     def read(t: String): DataFrame = spark.read.format(fmt).load(path(t))
-    // Every stage table is written here; returns the rows this write
-    // committed, observed on the write's own result stage (Spark applies a
-    // result stage's accumulator updates once per task, so the count is
-    // exact) — no re-read of the table and no extra count job. Unnamed
-    // observations get unique names: overlapping runs cannot collide.
+    // Every table is written here; returns the rows this write committed,
+    // observed on the write's own result stage (Spark applies a result
+    // stage's accumulator updates once per task, so the count is exact) —
+    // no re-read of the table and no extra count job. Unnamed observations
+    // get unique names: overlapping runs cannot collide.
     def write(df: DataFrame, t: String, mode: String,
               partitioned: Boolean = false): Long = {
       val rows = Observation()
@@ -178,101 +235,54 @@ object KgPipeline {
         KgStages.pending(input, read("docs"))
       else input
     val mode = if (conf.resume) "append" else "overwrite"
+    // the P tables grow on resume; every later table is rebuilt in full
+    val grows = Set("docs", "doc_triples", "mentions", "failures")
+    val stageOf = Map("docs" -> "p1_parse_docs", "doc_triples" -> "p2_doc_triples",
+      "mentions" -> "p3_mentions", "failures" -> "p4_failures",
+      "canon" -> "c1_cc", "link_triples" -> "l1_link_triples",
+      "triples" -> "m1_materialize", "deps" -> "l2_deps",
+      "skeleton" -> "l3_skeleton")
+    val rows = scala.collection.concurrent.TrieMap.empty[String, Long]
+    def commit(t: String, df: => DataFrame): DataFrame = {
+      rows(t) = timed(stageOf(t))(write(df, t,
+        if (grows(t)) mode else "overwrite", partitioned = t == "triples"))
+      read(t)
+    }
 
     // patch_if_needed before parse (documentrepository.py:1355-1404):
     // applied patches and conflicts are audited in their own stage table
     val patched = patches.map(pt => KgStages.patchStage(toParse, pt).persist())
-    // persist the exploded outputs; ParseOut itself is transient
+    // persist the exploded outputs; ParseOut itself is transient. The
+    // first commit materializes it; the rest of stage P (remaining tables
+    // + lineage-after-docs, write-audit-publish order preserved: lineage
+    // only reads the already-committed docs table) runs as concurrent jobs
+    // against the cache.
     val parsed = KgStages.parseStage(
       patched.fold(toParse)(_.map(_.toSourceFile))).persist()
-    var failedRows = 0L
-    var mentionCount = 0L
-    val parsedRows = try {
+    val tables = try {
       patched.foreach(p => timed("p0_patches")(write(
         p.filter(col("patchDesc").isNotNull || col("patchError").isNotNull)
           .select("repo", "path", "patchDesc", "patchError"), "patches", mode)))
-      // first write materializes the persisted ParseOut; everything else in
-      // stage P (remaining tables + lineage-after-docs, write-audit-publish
-      // order preserved: lineage only reads the already-committed docs
-      // table) runs as concurrent jobs against the cache
-      val docsRows = timed("p1_parse_docs")(
-        write(KgStages.docsDf(parsed), "docs", mode))
-      // The C stage depends only on the doc_triples table (p2), so it
-      // launches AS SOON AS that commit lands, overlapping the p3/p5 tail
-      // instead of waiting for the whole P wave — its driver-serial pieces
-      // (the local CC/canon solve) back-fill cores the P tail leaves idle.
-      inParallel(
-        () => {
-          timed("p2_doc_triples")(
-            write(KgStages.docTriplesDf(parsed), "doc_triples", mode))
-          timed("c1_cc") {
-            // curated edges + the parse-minted owl:sameAs equivalents
-            val allEdges = sameAs.toDF("src", "dst").unionByName(
-              read("doc_triples").filter(col("pred") === Vocab.OWL_SAMEAS &&
-                  !col("objIsLiteral"))
-                .select(col("subj").as("src"), col("obj").as("dst")))
-            write(canonFromEdges(allEdges), "canon", "overwrite")
-          }
-        },
-        () => mentionCount = timed("p3_mentions")(
-          write(KgStages.mentionsDf(parsed), "mentions", mode)),
-        () => failedRows = timed("p4_failures")(
-          write(KgStages.failuresDf(parsed), "failures", mode)),
-        () => timed("p5_lineage")(write(
-          KgStages.lineageDf(read("docs"), KgStages.hexKey(col("sha256")),
-            "parse", conf.runId),
-          "lineage", "append")))
-      docsRows
+      stages(parsed, sameAs, curated, conf.broadcastDict, alongsideP = docs =>
+        timed("p5_lineage")(write(KgStages.lineageDf(docs,
+          KgStages.hexKey(col("sha256")), "parse", conf.runId),
+          "lineage", "append")))(commit)
     } finally {
       parsed.unpersist()
       patched.foreach(_.unpersist())
     }
-
-    val docTriples0 = read("doc_triples")
-    val mentions = read("mentions")
-    // fuzzy label upgrade of publisher literals (ratio >= 0.8)
-    val docTriples = KgStages.fuzzyUpgrade(docTriples0,
-      EntityDict.publishers, Seq(Vocab.dcterms("publisher")))
-
-    // ---- stages L and M, overlapped. The former linked cache (mention ×
-    // dictionary join persisted, then aggregated three ways) is gone:
-    // link_triples is a pure mention dedup (it never used `resolved`),
-    // deps aggregates mentions FIRST and joins the dictionary once, and
-    // skeleton anti-joins the deps targets — one broadcast build instead
-    // of the full joined cache. deps/skeleton do not feed materialize, so
-    // they run concurrently with the m1 write and back-fill its serial
-    // phases (output commit, stage tails).
-    var linkCount = 0L
-    var tripleCount = 0L
-    inParallel(
-      () => {
-        linkCount = timed("l1_link_triples")(write(
-          KgStages.linkTriplesDf(mentions), "link_triples", "overwrite"))
-        val finalTriples = KgStages.materialize(
-          docTriples, read("link_triples"), curated, read("canon"))
-        tripleCount = timed("m1_materialize")(
-          write(finalTriples, "triples", "overwrite", partitioned = true))
-      },
-      () => {
-        val dict = KgStages.entityDictionary(docTriples0)
-        timed("l2_deps")(write(
-          KgStages.depsFromMentions(mentions, dict,
-            broadcastDict = conf.broadcastDict), "deps", "overwrite"))
-        timed("l3_skeleton")(write(KgStages.skeletonFromMentions(mentions,
-          read("deps").select(col("target")),
-          broadcastDict = conf.broadcastDict), "skeleton", "overwrite"))
-      })
     // materialize-stage lineage fold: xxhash64, not sha2 — the fold only
     // needs order-independent stability, and crypto hashing 10^6+ triples
     // per run was a measured fixed cost (input-content sha256 stays
     // cryptographic in the parse lineage, where input_hint requires it)
-    timed("m2_lineage")(write(KgStages.lineageDf(read("triples"),
+    timed("m2_lineage")(write(KgStages.lineageDf(tables.triples,
       KgStages.longKey(xxhash64(col("subj"), col("pred"), col("obj"),
         col("graph"))), "materialize", conf.runId), "lineage", "append"))
     // each pending row maps to exactly one ParseOut, which lands in either
     // docs or failures
-    Summary(parsedRows + failedRows, parsedRows, failedRows, tripleCount,
-      mentionCount, linkCount, (System.nanoTime() - t0) / 1e9, stageSec.toMap)
+    Summary(rows("docs") + rows("failures"), rows("docs"), rows("failures"),
+      rows("triples"), rows("mentions"), rows("link_triples"),
+      (System.nanoTime() - t0) / 1e9, stageSec.toMap)
   }
 
   /** Mixed-family input: n RFC text files plus n/4 markdown READMEs plus

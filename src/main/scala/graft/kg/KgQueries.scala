@@ -36,43 +36,17 @@ object KgQueries {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, Ctx]()
 
-  final case class Ctx(
-      docs: DataFrame,
-      triples: DataFrame,
-      mentions: DataFrame,
-      linked: DataFrame,
-      canon: DataFrame,
-      sameAs: DataFrame,
-      docTriples: DataFrame,
-      linkTriples: DataFrame,
-      curated: DataFrame)
+  /** The pipeline's own stage wiring with a persist commit: the same
+    * tables `KgPipeline.run` writes, over the mixed corpus. */
+  type Ctx = KgPipeline.Tables
 
   def ctx(spark: SparkSession): Ctx =
     cache.computeIfAbsent(spark, { s =>
-      val input = KgPipeline.synthesizeMixedInput(s, N, Seed)
-      val parsed = KgStages.parseStage(input).persist()
-      val docs = KgStages.docsDf(parsed)
-      val docTriples0 = KgStages.docTriplesDf(parsed)
-      val mentions = KgStages.mentionsDf(parsed)
-      val dict = KgStages.entityDictionary(docTriples0)
-      val linked = KgStages.linkStage(mentions, dict).persist()
-      val linkTriples = KgStages.linkTriplesDf(linked)
-      val docTriples = KgStages.fuzzyUpgrade(docTriples0,
-        EntityDict.publishers, Seq(Vocab.dcterms("publisher")))
-      // curated alias edges UNION the parse-minted owl:sameAs statements
-      // (the law family's lagen.nu↔rinfo equivalents) — the CC runs over
-      // realistic legal aliases, not only the curated table
-      val sameAs = KgPipeline.sameAsEdges(s, N)
-        .unionByName(docTriples0
-          .filter(col("pred") === Vocab.OWL_SAMEAS && !col("objIsLiteral"))
-          .select(col("subj").as("src"), col("obj").as("dst")))
-        .persist()
-      val curated = KgPipeline.curatedTriples(s, N)
-      val canon = KgPipeline.canonFromEdges(sameAs).persist()
-      val triples = KgStages.materialize(docTriples, linkTriples, curated, canon)
-        .persist()
-      Ctx(docs.persist(), triples, mentions.persist(), linked, canon, sameAs,
-        docTriples, linkTriples, curated)
+      // never unpersisted: that would re-cache every table built on it
+      val parsed = KgStages.parseStage(
+        KgPipeline.synthesizeMixedInput(s, N, Seed)).persist()
+      KgPipeline.stages(parsed, KgPipeline.sameAsEdges(s, N),
+        KgPipeline.curatedTriples(s, N))((_, df) => df.persist())
     })
 
   private def t(c: Ctx) = c.triples
@@ -232,14 +206,14 @@ object KgQueries {
     * rendered as sorted csv strings (array columns crash the driver's
     * pandas hash compare). */
   def deps(spark: SparkSession, dir: String): DataFrame =
-    KgStages.depsDf(ctx(spark).linked)
+    ctx(spark).deps
       .withColumn("sources", concat_ws(",", col("sources")))
       .orderBy("target")
 
   /** Skeleton entities: URIs referenced but never defined
     * (skeleton.py:17-44). */
   def skeleton(spark: SparkSession, dir: String): DataFrame =
-    KgStages.skeletonDf(ctx(spark).linked).orderBy("uri")
+    ctx(spark).skeleton.orderBy("uri")
 
   /** Canonicalization map (aliased URIs only). Oracle: DuckDB recursive-CTE
     * connected components over the dumped sameAs edges — an INDEPENDENT CC
@@ -1148,7 +1122,10 @@ object KgQueries {
     "kg_triples" -> ((s, _) => t(ctx(s))),
     "kg_docs" -> ((s, _) => ctx(s).docs.withColumn("sha60",
       conv(substring(col("sha256"), 1, 15), 16, 10).cast("long"))),
-    "kg_linked" -> ((s, _) => ctx(s).linked.select(
+    // the mention stream joined with the dictionary: the kg_deps and
+    // kg_skeleton oracles re-derive both tables from it
+    "kg_linked" -> ((s, _) => KgStages.linkStage(ctx(s).mentions,
+        KgStages.entityDictionary(ctx(s).docTriples)).select(
       "docId", "repo", "lang", "grammar", "candidateKey", "subjUri",
       "resolved")),
     "kg_sameas" -> ((s, _) => ctx(s).sameAs),
@@ -1157,7 +1134,7 @@ object KgQueries {
     // re-derives the materialize step (union + canon rewrite + dedup)
     // from these in SQL instead of restating the engine's own output
     // (VERDICT r2 "What's wrong" #4)
-    "kg_doc_triples" -> ((s, _) => ctx(s).docTriples),
+    "kg_doc_triples" -> ((s, _) => ctx(s).upgraded),
     "kg_link_triples" -> ((s, _) => ctx(s).linkTriples),
     "kg_curated" -> ((s, _) => ctx(s).curated),
     // full-graph N-Triples text dump: the kg_nt_roundtrip oracle parses

@@ -5,6 +5,7 @@ import graft.parse.RfcDoc
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.util.control.NonFatal
 
 /** The four KG-construction stages (north_star): parse/mention-detect (P),
   * entity-link (L), canonicalize (C), materialize (M), as typed Dataset /
@@ -122,7 +123,9 @@ object KgStages {
             p.sha256, p.uri, p.title, p.bodyXml, p.triples, p.mentions,
             None, (System.nanoTime() - t0) / 1000000)
         } catch {
-          case e: Exception =>
+          // a backtracking regex over a hostile document overflows the
+          // stack; the row fails, not the task
+          case e @ (NonFatal(_) | _: StackOverflowError) =>
             // sha only needed on the (rare) failure path — computing it
             // up front doubled the digest work of every healthy row
             val docId = s"${src.repo}/${src.path}@${src.commit}"
@@ -178,8 +181,11 @@ object KgStages {
     * (mention detection already minted the target URI — the reference
     * creates the Link node unconditionally, citationparser.py:98-165);
     * `resolved` marks whether the target exists in the dictionary
-    * (drives the deps edge table; unresolved = skeleton candidates,
-    * sources/general/skeleton.py:17-44).
+    * (resolved = deps edges; unresolved = skeleton candidates,
+    * sources/general/skeleton.py:17-44). The pipeline derives deps and
+    * skeleton from the mentions directly ([[depsFromMentions]],
+    * [[skeletonFromMentions]]); this join is the oracle's `kg_linked`
+    * table, from which the DuckDB checks re-derive both.
     *
     * Join strategy: broadcast when `broadcastDict`; otherwise a salted
     * shuffle join — mention candidateKeys are Zipf-skewed (mega-cited
@@ -228,25 +234,12 @@ object KgStages {
   /** Reverse-dependency edge table (relate_dependencies,
     * documentrepository.py:2018-2056): for each resolved target, the set of
     * source docs that reference it. owl:sameAs and rdf:type objects are
-    * excluded by construction (mentions only carry citation targets). */
-  def depsDf(linked: DataFrame): DataFrame =
-    linked.filter(col("resolved"))
-      .groupBy(col("candidateKey").as("target"))
-      .agg(sort_array(collect_set(col("docId"))).as("sources"),
-        count(lit(1)).as("n_refs"))
-
-  /** Dangling targets: referenced but never defined → skeleton entities
-    * (skeleton.py:17-44). */
-  def skeletonDf(linked: DataFrame): DataFrame =
-    linked.filter(!col("resolved") && !col("grammar").isin("URLRef"))
-      .select(col("candidateKey").as("uri")).distinct()
-
-  /** deps computed directly from the mention table: aggregate FIRST
-    * (map-side partial aggregation shrinks the shuffle to one row per
-    * target — guide §2.3), then ONE broadcast dictionary join keeps only
-    * resolved targets. Row-identical to `depsDf(linkStage(mentions,
-    * dict))` (asserted in KgSpec) without materializing the full
-    * mention×dict join. */
+    * excluded by construction (mentions only carry citation targets).
+    * Aggregates FIRST (map-side partial aggregation shrinks the shuffle to
+    * one row per target — guide §2.3), then ONE broadcast dictionary join
+    * keeps only resolved targets: row-identical to grouping the resolved
+    * rows of [[linkStage]] (asserted in KgSpec) without materializing the
+    * full mention×dict join. */
   def depsFromMentions(mentions: DataFrame, dict: DataFrame,
                        broadcastDict: Boolean = true): DataFrame = {
     val d = dict.select(col("uri"))
@@ -258,13 +251,15 @@ object KgStages {
       .drop("uri")
   }
 
-  /** skeleton from the mention table plus the already-computed deps
-    * targets: {candidateKey with a non-URLRef mention} ∖ {resolved
-    * targets}. Equivalent to `skeletonDf(linkStage(...))`: a resolved
-    * target with any mention IS a deps row, and a key whose mentions are
-    * all URLRef never enters either side's candidate set. Asserted in
-    * KgSpec. The targets are a subset of the dictionary, so they are
-    * broadcast exactly when `depsFromMentions` broadcasts it. */
+  /** Dangling targets: referenced but never defined → skeleton entities
+    * (skeleton.py:17-44). From the mention table plus the already-computed
+    * deps targets: {candidateKey with a non-URLRef mention} ∖ {resolved
+    * targets}. Equivalent to the distinct unresolved non-URLRef keys of
+    * [[linkStage]]: a resolved target with any mention IS a deps row, and a
+    * key whose mentions are all URLRef never enters either side's
+    * candidate set. Asserted in KgSpec. The targets are a subset of the
+    * dictionary, so they are broadcast exactly when `depsFromMentions`
+    * broadcasts it. */
   def skeletonFromMentions(mentions: DataFrame, depsTargets: DataFrame,
                            broadcastDict: Boolean = true): DataFrame = {
     val t = depsTargets.select(col("target"))
@@ -381,7 +376,9 @@ object KgStages {
     * documentstore.py:400-470): rows of `input` not yet present in the
     * processed docs table with the same content hash. A changed file
     * (different sha256 for the same (repo,path,commit)) is re-processed;
-    * an unchanged one is skipped. */
+    * an unchanged one is skipped. The result is local-checkpointed: a
+    * plan that still read `processedDocs`' path would be re-cached by the
+    * run's own append to it, and then see no pending rows. */
   def pending(input: Dataset[SourceFile], processedDocs: DataFrame): Dataset[SourceFile] = {
     val spark = input.sparkSession
     import spark.implicits._
@@ -395,5 +392,6 @@ object KgStages {
         "left_anti")
       .drop("sha256")
       .as[SourceFile]
+      .localCheckpoint()
   }
 }

@@ -29,7 +29,7 @@ object RoundTripOps {
     def key(t: Triple): Key =
       (t.subj, t.pred, t.obj, t.objIsLiteral,
         t.objDatatype.getOrElse(""), t.objLang.getOrElse(""))
-    KgQueries.ctx(spark).docTriples
+    KgQueries.ctx(spark).upgraded
       .select(col("subj"), col("pred"), col("obj"), col("objIsLiteral"),
         col("objDatatype"), col("objLang"))
       .distinct()

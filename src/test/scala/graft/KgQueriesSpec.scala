@@ -227,6 +227,29 @@ class KgQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("pipeline run and query context commit the same stage tables") {
+    val c = KgQueries.ctx(spark)
+    val wd = java.nio.file.Files.createTempDirectory("graft-kgq-run").toString
+    KgPipeline.run(spark, KgPipeline.Conf(workDir = wd),
+      KgPipeline.synthesizeMixedInput(spark, KgQueries.N, KgQueries.Seed),
+      KgPipeline.sameAsEdges(spark, KgQueries.N),
+      KgPipeline.curatedTriples(spark, KgQueries.N))
+    // rows as a multiset, columns in name order; array sources as csv
+    def bag(df: org.apache.spark.sql.DataFrame): Map[String, Int] = {
+      val d = if (df.columns.contains("sources"))
+        df.withColumn("sources", concat_ws(",", col("sources"))) else df
+      d.select(d.columns.sorted.map(col).toIndexedSeq: _*).collect()
+        .groupBy(_.toString).view.mapValues(_.length).toMap
+    }
+    Seq("triples" -> c.triples, "canon" -> c.canon,
+        "link_triples" -> c.linkTriples, "deps" -> c.deps,
+        "skeleton" -> c.skeleton).foreach { case (table, committed) =>
+      val want = bag(committed)
+      assert(want.nonEmpty, table)
+      assert(bag(spark.read.parquet(s"$wd/$table")) == want, table)
+    }
+  }
+
   test("ctx build budget: at most 64 tasks and 4 jobs at local[4]") {
     // every job and task of one fresh session's context build; a marker
     // job flushes the listener queue (events reach one listener in order)

@@ -216,8 +216,9 @@ class KgSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("depsFromMentions/skeletonFromMentions == linked-cache formulations") {
-    // the pipeline's aggregate-first L stage must match the linkStage-based
-    // operators the query surface uses, row for row
+    // the pipeline's aggregate-first L stage must match the formulations
+    // over the mention x dictionary join (the oracle's kg_linked table),
+    // row for row
     val input = KgPipeline.synthesizeInput(spark, 300, 42L)
     val parsed = KgStages.parseStage(input).persist()
     val mentions = KgStages.mentionsDf(parsed)
@@ -225,8 +226,14 @@ class KgSpec extends AnyFunSuite with BeforeAndAfterAll {
     val linked = KgStages.linkStage(mentions, dict).persist()
     def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.collect().map(_.toString).toSet
-    val depsA = KgStages.depsDf(linked)
-    val skelA = KgStages.skeletonDf(linked)
+    // the reference side: resolved rows grouped by target, and the
+    // distinct unresolved non-URLRef keys
+    val depsA = linked.filter(col("resolved"))
+      .groupBy(col("candidateKey").as("target"))
+      .agg(sort_array(collect_set(col("docId"))).as("sources"),
+        count(lit(1)).as("n_refs"))
+    val skelA = linked.filter(!col("resolved") && col("grammar") =!= "URLRef")
+      .select(col("candidateKey").as("uri")).distinct()
     // both settings of the pipeline's broadcastDict knob
     for (bc <- Seq(true, false)) {
       val depsB = KgStages.depsFromMentions(mentions, dict, broadcastDict = bc)
@@ -369,6 +376,34 @@ class KgSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(_.startsWith("count at KgPipeline.scala:"))
     assert(countJobs.isEmpty, s"count jobs in the resume run: $countJobs")
     assert(callSites.asScala.exists(_.startsWith("save at KgPipeline.scala:")))
+    // the added documents were parsed, not only recorded in docs: the
+    // resumed tables hold what a clean run over all 30 documents commits
+    assert(after("mentions") > before("mentions"), "no mentions appended")
+    val clean = tmpDir()
+    run(all, conf.copy(workDir = clean))
+    def bag(dir: String): Map[String, Int] = {
+      val t = spark.read.parquet(s"$dir/triples")
+      t.select(t.columns.sorted.map(col).toIndexedSeq: _*).collect()
+        .groupBy(_.toString).view.mapValues(_.length).toMap
+    }
+    assert(bag(wd) == bag(clean))
+  }
+
+  test("parse isolates a document whose parser overflows the stack") {
+    import spark.implicits._
+    // one tag with 100 000 attributes: HtmlDoc's tag regex recurses once
+    // per attribute
+    val hostile = graft.model.SourceFile("hostile", "deep.html", "c0", "en",
+      "<html><body><p" + " a=\"1\"" * 100000 + ">x</p></body></html>")
+    val input = hostile +: Corpus.gen(7L, 20).map(_.src)
+    val parsed = KgStages.parseStage(spark.createDataset(input)).persist()
+    val docs = KgStages.docsDf(parsed).select("path").as[String].collect()
+    val failed = KgStages.failuresDf(parsed).select("path", "error")
+      .as[(String, String)].collect()
+    parsed.unpersist()
+    assert((docs ++ failed.map(_._1)).sorted.toSeq == input.map(_.path).sorted)
+    assert(failed.map(_._1).toSeq == Seq("deep.html"))
+    assert(failed.head._2.startsWith("StackOverflowError"), failed.head._2)
   }
 
   test("inParallel waits for every branch before rethrowing the first failure") {
