@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 
 /** Declarative facet API — the reference's `facets()` surface
   * (/root/reference/ferenda/facet.py:348-422): a facet is (rdf predicate,
-  * selector, identificator, sort key, multi-valuedness, toc/feed flags). A
-  * ferenda repo's facet list ports 1:1; the engine compiles the list into
-  * one pivot plan over the triple table plus per-facet grouping queries
-  * (facet_query semantics, documentrepository.py:2293-2383).
+  * binding, selector, identificator, sort key, index type). A ferenda
+  * repo's facet list ports 1:1; [[facetedData]] compiles the list into one
+  * pivot plan over the triple table (a predicate filter, then one
+  * conditional aggregation per subject), and [[tocPageSets]] groups the
+  * pivot per facet (facet_query semantics, documentrepository.py:2293-2383).
   */
 object Facets {
 
@@ -39,8 +40,6 @@ object Facets {
       identificator: Column => Column = Selectors.defaultIdentificator,
       /** key for ordering docs within a group (facet.py:195-210) */
       sortKey: Column => Column = Selectors.titleSortKey,
-      multipleValues: Boolean = false,
-      useForToc: Boolean = true,
       /** how a search index should type this field (facet.indexingtype,
         * facet.py; drives make_schema + per-field boosts) */
       indexingType: IndexType = Label)
@@ -105,42 +104,38 @@ object Facets {
       })
     }.toMap
 
+  /** The document-type rule: the rfc ontology families plus the court
+    * referats. Sub-resource types (bibo parts, rpubl chapters/sections)
+    * do not make a subject a document. */
+  def isDocType(obj: Column): Column =
+    obj.startsWith(Vocab.RFC_NS) || obj === Vocab.rpubl("Rattsfallsreferat")
+
   /** faceted_data (documentrepository.py:2235-2291): one row per document
-    * URI with one column per facet — filter + per-predicate aggregation
-    * joins (multi-valued facets keep arrays; single pick min for
-    * determinism). */
-  def facetedData(triples: DataFrame, facets: Seq[Facet],
-                  typeFilter: Column => Column = c =>
-                    c.startsWith(Vocab.RFC_NS) ||
-                      c === Vocab.rpubl("Rattsfallsreferat"))
-      : DataFrame = {
-    val typed = triples
-      .filter(col("pred") === Vocab.RDF_TYPE && typeFilter(col("obj")))
-      .select(col("subj").as("uri")).distinct()
-    facets.filter(_.pred != Vocab.RDF_TYPE).foldLeft(
-      typed.join(
-        triples.filter(col("pred") === Vocab.RDF_TYPE)
-          .groupBy(col("subj").as("uri"))
-          .agg(min(col("obj")).as("rdf_type")),
-        Seq("uri"), "left")) { (acc, f) =>
-      val colDf =
-        if (f.multipleValues)
-          triples.filter(col("pred") === f.pred)
-            .groupBy(col("subj").as("uri"))
-            .agg(sort_array(collect_set(col("obj"))).as(f.binding))
-        else
-          triples.filter(col("pred") === f.pred)
-            .groupBy(col("subj").as("uri"))
-            .agg(min(col("obj")).as(f.binding))
-      acc.join(colDf, Seq("uri"), "left")
-    }
+    * URI — `uri`, `rdf_type` (the min document type), `repo` (the min
+    * repo of its document-type rows: the type row's repo, as every
+    * document carries one document type), then one column per non-type
+    * facet binding holding the min object of its predicate (single pick
+    * for determinism). One plan: filter the triples to rdf:type plus the facets' predicates — every
+    * row a `min(when(...))` below can pick — then one `groupBy(subj)`
+    * conditional aggregation, so the subject shuffle carries only those
+    * rows. Subjects without a document type are dropped. */
+  def facetedData(triples: DataFrame, facets: Seq[Facet]): DataFrame = {
+    val typeRow = col("pred") === Vocab.RDF_TYPE && isDocType(col("obj"))
+    val others = facets.filter(_.pred != Vocab.RDF_TYPE)
+    triples.filter(col("pred").isin(Vocab.RDF_TYPE +: others.map(_.pred): _*))
+      .groupBy(col("subj").as("uri"))
+      .agg(min(when(typeRow, col("obj"))).as("rdf_type"),
+        min(when(typeRow, col("repo"))).as("repo") +:
+          others.map(f =>
+            min(when(col("pred") === f.pred, col("obj"))).as(f.binding)): _*)
+      .filter(col("rdf_type").isNotNull)
   }
 
   /** toc_pagesets + toc_select_for_pages (documentrepository.py:2855-2995):
     * per facet, distinct selector values with doc counts and the first
     * sortKey-ordered member per page. */
   def tocPageSets(faceted: DataFrame, facets: Seq[Facet]): DataFrame = {
-    val pages = facets.filter(f => f.useForToc && f.binding != "rdf_type")
+    val pages = facets.filter(_.binding != "rdf_type")
       .map { f =>
         val sel = f.selector(col(f.binding))
         faceted.filter(col(f.binding).isNotNull)

@@ -56,37 +56,15 @@ object KgQueries {
     t(ctx(spark)).orderBy("subj", "pred", "obj", "graph")
 
   /** Facet SELECT (facet_query, documentrepository.py:2293-2383):
-    * `SELECT ?uri ?title ?publisher ?issued ?category WHERE { ?uri a rfc:* .
-    * OPTIONAL ... }` as filter + pivot-by-join over the triple table. */
-  /** The pivot subtree feeds every search/toc/feed/stats query, several of
-    * which reference it 2-4x within one DAG (ranking offsets, dimension
-    * unions). The former typed-filter + 4 facetCol joins + dedup + sort
-    * formulation carried ~12 Exchanges, multiplied by every consumer
-    * reference (measured: kg_search plans with 90+ Exchanges, each a
-    * stage-scheduling round trip). This single conditional aggregation is
-    * value-identical — one type per document (the reference mints exactly
-    * one; multiple types would already diverge from the oracle's
-    * un-deduped 5-way join replay), min-per-predicate facet picks
-    * unchanged — and needs ONE exchange. Consumers all impose their own
-    * terminal ordering; the registered kg_facet_pivot query adds the uri
-    * sort explicitly. */
-  def facetPivot(spark: SparkSession, dir: String): DataFrame = {
-    val tr = t(ctx(spark))
-    // document-level types: the rfc ontology families plus the court
-    // referats (sub-resource types — bibo parts, rpubl chapters/sections —
-    // stay out of the document pivot)
-    val typeCond = col("pred") === Vocab.RDF_TYPE &&
-      (col("obj").startsWith(Vocab.RFC_NS) ||
-       col("obj") === Vocab.rpubl("Rattsfallsreferat"))
-    tr.groupBy(col("subj").as("uri"))
-      .agg(
-        min(when(typeCond, col("obj"))).as("rdf_type"),
-        min(when(col("pred") === Vocab.dcterms("title"), col("obj"))).as("title"),
-        min(when(col("pred") === Vocab.dcterms("publisher"), col("obj"))).as("publisher"),
-        min(when(col("pred") === Vocab.dcterms("issued"), col("obj"))).as("issued"),
-        min(when(col("pred") === Vocab.dcterms("subject"), col("obj"))).as("category"))
-      .filter(col("rdf_type").isNotNull)
-  }
+    * `SELECT ?uri ?rdf_type ?title ?publisher ?issued ?category WHERE
+    * { ?uri a rfc:* . OPTIONAL ... }` as [[Facets.facetedData]] over the
+    * default facets — one exchange. The pivot feeds every
+    * search/toc/feed/stats query, several of which reference it 2-4x
+    * within one DAG (ranking offsets, dimension unions), so its exchange
+    * count multiplies. Consumers all impose their own terminal ordering;
+    * the registered kg_facet_pivot query adds the uri sort explicitly. */
+  def facetPivot(spark: SparkSession, dir: String): DataFrame =
+    Facets.facetedData(t(ctx(spark)), Facets.defaultFacets).drop("repo")
 
   /** Dataset stats (wsgiapp.py:232-386): distinct documents per facet
     * observation — publisher and issued-year dimensions unioned. */
@@ -221,9 +199,6 @@ object KgQueries {
   def canonMap(spark: SparkSession, dir: String): DataFrame =
     ctx(spark).canon.orderBy("uri")
 
-  /** TOC pageset (documentrepository.py:2855-2995): documents grouped by
-    * first letter of the title sortkey, with per-page document counts and
-    * a deterministic first member. */
   /** The first-letter pageset selector's normalization (Facet
     * titlesortkey semantics) — ONE definition shared by kg_toc_pages
     * and kg_toc_select so their page assignment can never drift. */
@@ -232,6 +207,9 @@ object KgQueries {
   private def tocFirstLetter: org.apache.spark.sql.Column =
     substring(regexp_replace(tocSortKey, " ", ""), 1, 1)
 
+  /** TOC pageset (documentrepository.py:2855-2995): documents grouped by
+    * first letter of the title sortkey, with per-page document counts and
+    * a deterministic first member. */
   def tocPages(spark: SparkSession, dir: String): DataFrame = {
     val fac = facetPivot(spark, dir)
     fac.filter(col("title").isNotNull)
@@ -242,12 +220,6 @@ object KgQueries {
       .orderBy("letter")
   }
 
-  /** Locale-collated TOC listing (reference: locale.strxfrm sort under
-    * collate_locale, documentrepository.py:2924-2932, 193-195): Swedish
-    * documents ranked by ICU `sv` collation — å/ä/ö sort after z, where
-    * the ASCII sortkey (tocPages) mangles them. Spark 4 collation in the
-    * sort key; ranking via the two-phase Ranking.globalRank (one pageset
-    * is small, but the operator shape must not carry a global window). */
   /** toc_select_for_pages (documentrepository.py:2936-2995): for every
     * TOC page of every pageset, the ordered document list that appears
     * on it — rows (binding, page_value, pos, uri, title). Two pagesets
@@ -275,6 +247,12 @@ object KgQueries {
       .orderBy("binding", "page_value", "pos")
   }
 
+  /** Locale-collated TOC listing (reference: locale.strxfrm sort under
+    * collate_locale, documentrepository.py:2924-2932, 193-195): Swedish
+    * documents ranked by ICU `sv` collation — å/ä/ö sort after z, where
+    * the ASCII sortkey (tocPages) mangles them. Spark 4 collation in the
+    * sort key; ranking via the two-phase Ranking.globalRank (one pageset
+    * is small, but the operator shape must not carry a global window). */
   def tocCollated(spark: SparkSession, dir: String): DataFrame = {
     val docs = ctx(spark).docs.filter(col("lang") === "sv")
       .select(col("uri"), col("title"))
@@ -312,10 +290,13 @@ object KgQueries {
   def requiredPredicates(spark: SparkSession, dir: String): DataFrame = {
     val tr = t(ctx(spark))
     val docsUris = ctx(spark).docs.select(col("uri")).distinct()
-    // presence flags in ONE aggregation over the triple table instead of
-    // three filter+distinct+join passes (same flags: max(bool) ≡ "any
-    // row with that predicate exists"; absent subjects null-fill false)
-    val flags = tr.groupBy(col("subj").as("uri")).agg(
+    // presence flags in ONE aggregation over the three predicates' rows
+    // instead of three filter+distinct+join passes (same flags: max(bool)
+    // ≡ "any row with that predicate exists"; absent subjects null-fill
+    // false)
+    val flags = tr.filter(col("pred").isin(Vocab.RDF_TYPE,
+        Vocab.dcterms("title"), Vocab.dcterms("identifier")))
+      .groupBy(col("subj").as("uri")).agg(
       max(col("pred") === Vocab.RDF_TYPE).as("has_type"),
       max(col("pred") === Vocab.dcterms("title")).as("has_title"),
       max(col("pred") === Vocab.dcterms("identifier")).as("has_identifier"))
@@ -573,8 +554,10 @@ object KgQueries {
     * [[RangeMod]]. The field/boost table comes from the DERIVED index
     * schema (Facets.makeSchema over the searchFacets — conflicting
     * declarations would have thrown SchemaConflictError), not hardcoded
-    * literals. Integer counts × exact-binary boosts keep the double sum
-    * fp-exact for the oracle. */
+    * literals. One aggregation over the literal and dcterms:issued rows
+    * yields (score, year) per subject; a subject needs both. Integer
+    * counts × exact-binary boosts keep the double sum fp-exact (and
+    * order-independent) for the oracle. */
   def searchBoosted(spark: SparkSession, dir: String,
                     term: String = "protocol",
                     range: RangeMod = Between(1995, 2020)): DataFrame = {
@@ -587,19 +570,22 @@ object KgQueries {
     val boost = boosts.foldLeft(when(lit(false), lit(1.0))) {
       case (acc, (pred, b)) => acc.when(col("pred") === pred, lit(b))
     }.otherwise(lit(1.0))
-    val scored = tr.filter(col("objIsLiteral"))
-      .withColumn("c", cnt).filter(col("c") > 0)
+    val isIssued = col("pred") === Vocab.dcterms("issued")
+    val scored = tr.filter(col("objIsLiteral") || isIssued)
+      .withColumn("c", cnt)
       .groupBy(col("subj").as("uri"))
-      .agg(round(sum(col("c") * boost), 2).as("score"))
-    val issued = tr.filter(col("pred") === Vocab.dcterms("issued"))
-      .groupBy(col("subj").as("uri"))
-      .agg(min(substring(col("obj"), 1, 4).cast("int")).as("year"))
+      .agg(
+        round(sum(when(col("objIsLiteral") && col("c") > 0,
+          col("c") * boost)), 2).as("score"),
+        min(when(isIssued, substring(col("obj"), 1, 4).cast("int")))
+          .as("year"))
     val rangeCond = range match {
       case Less(mx) => col("year") < mx
       case More(mn) => col("year") > mn
       case Between(mn, mx) => col("year").between(mn, mx)
     }
-    val hits = scored.join(issued, Seq("uri")).filter(rangeCond)
+    val hits = scored
+      .filter(col("score").isNotNull && col("year").isNotNull && rangeCond)
     graft.rel.Ranking.globalRank(hits,
         Seq(col("score").desc, col("uri").asc), "rk")
       .select("rk", "uri", "score", "year")
@@ -636,30 +622,17 @@ object KgQueries {
     * dcterms:title, dcterms:issued (this corpus's dcterms:published
     * slot), prov:wasGeneratedBy. The CSV rendering (QUOTE_MINIMAL,
     * ';' delimiter) happens IN the engine so the oracle compares bytes.
-    * Shape: one triple-table scan feeding per-predicate hash aggregates
-    * keyed on subject — the same broadcast-sized dimensional joins the
-    * facet pivot uses; nothing quadratic, nothing driver-side. */
+    * Shape: the document rows are [[Facets.facetedData]] over this
+    * inventory's predicates (the facet pivot's plan), joined with one
+    * rdf:type count per document; nothing quadratic, nothing
+    * driver-side. */
   def csvInventory(spark: SparkSession, dir: String): DataFrame = {
     val tr = t(ctx(spark))
-    val typeCond = col("pred") === Vocab.RDF_TYPE &&
-      (col("obj").startsWith(Vocab.RFC_NS) ||
-       col("obj") === Vocab.rpubl("Rattsfallsreferat"))
-    // one conditional aggregation instead of a typed groupBy plus four
-    // facetCol joins (same picks: one qualifying type per document — see
-    // facetPivot — and min-per-predicate facet values)
-    val docs = tr.groupBy(col("subj").as("uri"))
-      .agg(
-        min(when(typeCond, col("repo"))).as("repo"),
-        min(when(typeCond, qnamed(col("obj")))).as("rdf_type"),
-        min(when(col("pred") === Vocab.dcterms("identifier"), col("obj")))
-          .as("identifier"),
-        min(when(col("pred") === Vocab.dcterms("title"), col("obj")))
-          .as("title"),
-        min(when(col("pred") === Vocab.dcterms("issued"), col("obj")))
-          .as("issued"),
-        min(when(col("pred") === Vocab.PROV + "wasGeneratedBy", col("obj")))
-          .as("generated_by"))
-      .filter(col("rdf_type").isNotNull)
+    val docs = Facets.facetedData(tr, Seq(
+      Facets.Facet(Vocab.dcterms("identifier"), "identifier"),
+      Facets.Facet(Vocab.dcterms("title"), "title"),
+      Facets.Facet(Vocab.dcterms("issued"), "issued"),
+      Facets.Facet(Vocab.PROV + "wasGeneratedBy", "generated_by")))
     val subs = tr.filter(col("pred") === Vocab.RDF_TYPE)
       .select(substring_index(col("subj"), "#", 1).as("uri"))
       .groupBy("uri").agg(count(lit(1)).as("subobjects"))
@@ -670,7 +643,7 @@ object KgQueries {
         concat_ws(";",
           csvField(col("basefile")),
           csvField(col("subobjects").cast("string")),
-          csvField(col("rdf_type")),
+          csvField(qnamed(col("rdf_type"))),
           csvField(col("identifier")),
           csvField(col("title")),
           csvField(col("issued")),

@@ -33,6 +33,80 @@ class FacetsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(years.forall(_.matches("\\d{4}")))
   }
 
+  test("facetedData: the filtered aggregation equals the per-facet join fold") {
+    import graft.model.Vocab
+    import spark.implicits._
+    val doc = "https://example.org/facets-spec/doc"
+    val extra = Seq(
+      // a section: title, non-document type — never a pivot row
+      (doc + "#s1", Vocab.dcterms("title"), "Section one"),
+      (doc + "#s1", Vocab.RDF_TYPE, "http://example.org/ontology/Part"),
+      // a document with two titles, an extra non-document type that
+      // sorts before its document type, and a predicate outside the
+      // facet set
+      (doc, Vocab.RDF_TYPE, Vocab.rfc("RFC")),
+      (doc, Vocab.RDF_TYPE, "http://example.org/ontology/Other"),
+      (doc, Vocab.dcterms("title"), "Second title"),
+      (doc, Vocab.dcterms("title"), "First title"),
+      (doc, Vocab.dcterms("description"), "Not a facet"))
+      .toDF("subj", "pred", "obj").withColumn("repo", lit("spec"))
+    val tr = KgQueries.ctx(spark).triples
+      .unionByName(extra, allowMissingColumns = true)
+    // the former per-facet filter + groupBy + left-join fold, with
+    // rdf_type restricted to the document-type rule
+    def foldReference(facets: Seq[Facets.Facet]) = {
+      val typed = tr.filter(col("pred") === Vocab.RDF_TYPE &&
+          Facets.isDocType(col("obj")))
+        .groupBy(col("subj").as("uri"))
+        .agg(min(col("obj")).as("rdf_type"), min(col("repo")).as("repo"))
+      facets.filter(_.pred != Vocab.RDF_TYPE).foldLeft(typed) { (acc, f) =>
+        acc.join(tr.filter(col("pred") === f.pred)
+          .groupBy(col("subj").as("uri"))
+          .agg(min(col("obj")).as(f.binding)), Seq("uri"), "left")
+      }
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("\u0000"))
+        .toSeq
+    Seq(Facets.defaultFacets, Facets.searchFacets).foreach { facets =>
+      val fd = Facets.facetedData(tr, facets)
+      val ref = foldReference(facets).select(fd.columns.map(col): _*)
+      assert(rows(fd) == rows(ref))
+      assert(fd.count() == KgQueries.MixedN + 1)
+      val mine = fd.filter(col("uri").startsWith(doc)).collect()
+      assert(mine.length == 1)
+      assert(mine(0).getAs[String]("uri") == doc)
+      assert(mine(0).getAs[String]("rdf_type") == Vocab.rfc("RFC"))
+      assert(mine(0).getAs[String]("repo") == "spec")
+      assert(mine(0).getAs[String]("title") == "First title")
+      assert(fd.columns.toSeq == Seq("uri", "rdf_type", "repo") ++
+        facets.map(_.binding).filterNot(_ == "rdf_type"))
+    }
+  }
+
+  test("facet pivots: the subject aggregate reads pred-filtered rows") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.logical._
+    def filteredOnPred(p: LogicalPlan): Boolean = p match {
+      case Filter(cond, _) => cond.references.exists(_.name == "pred")
+      case Project(_, child) => filteredOnPred(child)
+      case _ => false
+    }
+    Seq("facetPivot" -> KgQueries.facetPivot(spark, ""),
+        "csvInventory" -> KgQueries.csvInventory(spark, "")).foreach {
+      case (name, df) =>
+        val bySubj = df.queryExecution.optimizedPlan.collect {
+          case a: Aggregate if (a.groupingExpressions match {
+            case Seq(r: AttributeReference) => r.name == "subj"
+            case _ => false
+          }) => a
+        }
+        assert(bySubj.nonEmpty, s"$name: no subject aggregate")
+        bySubj.foreach(a => assert(filteredOnPred(a.child),
+          s"$name: subject aggregate over unfiltered input\n$a"))
+    }
+  }
+
   test("tocPageSets: pages partition the docs per facet, deterministic") {
     val tr = KgQueries.ctx(spark).triples
     val fd = Facets.facetedData(tr, Facets.defaultFacets)
