@@ -5,12 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Optimization-round measurement harness (guide §1) — SEPARATE from the
   * frozen graft.Bench, but built on its session so measured numbers
   * transfer 1:1: per-query noop-sink and count timing, formatted-plan
-  * dumps, KG-pipeline stage timings at one or more parallelism levels, and
-  * a single-threaded micro-profile of the stage-P row function. Its numbers
-  * are never graded.
+  * dumps, and KG-pipeline stage timings at one or more parallelism levels.
+  * Its numbers are never graded. The parse row function's per-doc cost is
+  * timed by perfbench (`parse.us_per_doc`), on the real `DocParsers.parse`.
   *
   * Usage:
-  *   runMain graft.BenchExtra parse [nDocs]            — per-phase parse profile
   *   runMain graft.BenchExtra pipeline [n] [cpus,...]  — stage timings per level
   *   runMain graft.BenchExtra noop <query> [query2 ...]  — noop-sink timing
   *   runMain graft.BenchExtra time <query> [query2 ...]  — count-action timing
@@ -19,60 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object BenchExtra {
 
-  private val Usage = "usage: BenchExtra parse [n] | pipeline [n] [cpus,...] | " +
+  private val Usage = "usage: BenchExtra pipeline [n] [cpus,...] | " +
     "noop <q>... | time <q>... | explain <dir> [q...]"
-
-  /** Single-threaded per-phase profile of the parse row function over a
-    * synthetic corpus slice (same generator as the bench's KG pipeline). */
-  private def parseProfile(nDocs: Int): Unit = {
-    val docs = (0L until nDocs.toLong)
-      .map(i => graft.kg.Corpus.doc(42L, i, nDocs.toLong).src).toArray
-    def pass(label: String): Unit = {
-      var tFsm, tHeader, tSections, tMentions, tXml, tSha = 0.0
-      var nTriples, nMentions = 0L
-      def timed[T](f: => T, add: Double => Unit): T = {
-        val t0 = System.nanoTime(); val r = f
-        add((System.nanoTime() - t0) / 1e9); r
-      }
-      for (src <- docs) {
-        val basefileGuess = src.path.replaceAll("^.*/", "")
-          .replaceAll("\\..*$", "").replaceAll("\\D", "") match {
-          case "" => "0"; case s => s
-        }
-        val graph = s"${graft.kg.EntityDict.base}/dataset/${src.repo}"
-        val tree = timed(graft.parse.RfcParser.parse(src.content, basefileGuess),
-          tFsm += _)
-        val kids = tree.children
-        val header = kids.head.text.getOrElse("")
-        var body = tree.copy(children = kids.drop(2)
-          .filterNot(c => c.tag == "PreambleSection" &&
-            c.attr("title").contains("Table of Contents")))
-        val basefile = graft.parse.RfcDoc.rfcNumFromHeader(header)
-          .getOrElse(basefileGuess)
-        val uri = graft.kg.Coin.rfcUri(basefile)
-        val (cleaned, _) = graft.parse.RfcDoc.cleanupBody(body)
-        body = cleaned
-        val ht = timed(graft.parse.RfcDoc.headerTriples(header, uri, graph, basefile),
-          tHeader += _)
-        val st = timed(graft.parse.RfcDoc.sectionTriples(body, uri, graph, basefile),
-          tSections += _)
-        nTriples += ht.size + st.size
-        val docId = s"${src.repo}/${src.path}@${src.commit}"
-        val ms = timed(graft.parse.RfcDoc.collectMentions(body, src, docId, uri),
-          tMentions += _)
-        nMentions += ms.size
-        timed(graft.parse.TreeNode.toXml(body), tXml += _)
-        timed(graft.parse.RfcDoc.sha256Hex(src.content), tSha += _)
-      }
-      val total = tFsm + tHeader + tSections + tMentions + tXml + tSha
-      println(f"[$label] docs=$nDocs triples=$nTriples mentions=$nMentions " +
-        f"fsm=$tFsm%.2fs header=$tHeader%.3fs sections=$tSections%.3fs " +
-        f"mentions=$tMentions%.2fs toXml=$tXml%.2fs sha=$tSha%.2fs " +
-        f"total=$total%.2fs (${total * 1e6 / nDocs}%.0f us/doc, " +
-        f"${nDocs / total}%.0f docs/s/core, ${nTriples / total}%.0f triples/s/core)")
-    }
-    pass("warm1"); pass("warm2"); pass("hot")
-  }
 
   /** One warmed pipeline run of `n` docs per parallelism level, each level in
     * a fresh session of the frozen bench's KG shape (24 fixed shuffle
@@ -181,8 +128,6 @@ object BenchExtra {
     def known(qs: List[String]): List[String] =
       qs.map(q => if (SparkEntry.queries.contains(q)) q else usage(s"unknown query $q"))
     args.toList match {
-      case "parse" :: rest if rest.size <= 1 =>
-        parseProfile(rest.headOption.fold(3000)(int))
       case "pipeline" :: rest if rest.size <= 2 =>
         pipelineProfile(rest.headOption.fold(50000)(int).toLong,
           rest.lift(1).fold(Seq(4))(_.split(",").toSeq.map(int)))

@@ -3,32 +3,13 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Facet selector / scalar function library (SURVEY.md §2.8): the
-  * reference's documented public selector set (facet.py:128-338) and the
-  * URI/string utilities they rely on (util.py), each as a NATIVE column
-  * expression — codegen'd, usable in any query, no UDFs.
+/** The facet selectors and util.py helpers the registered queries and
+  * parsers use (SURVEY.md §2.8): titlesortkey, uri_leaf and the natural
+  * sort key as NATIVE column expressions (codegen'd, no UDFs), plus the
+  * roman-numeral conversions as plain Scala. util.relurl is the SQL
+  * function `relurl` ([[Expressions.relurlStr]]).
   */
 object Selectors {
-
-  /** defaultselector (facet.py:128-140): identity. */
-  def defaultSelector(c: Column): Column = c
-
-  /** defaultidentificator (facet.py:142-154): lowercase, spaces → '-'. */
-  def defaultIdentificator(c: Column): Column =
-    regexp_replace(lower(c), " ", "-")
-
-  /** year (facet.py:156-177): year of a date-ish string — the reference
-    * dispatches on length (19=datetime, 10=date, 7=year-month); coalesce
-    * over the three shapes reproduces that. */
-  def yearSelector(c: Column): Column =
-    coalesce(
-      year(try_to_timestamp(c, lit("yyyy-MM-dd HH:mm:ss"))),
-      year(try_to_timestamp(c, lit("yyyy-MM-dd"))),
-      year(try_to_timestamp(concat(c, lit("-01")), lit("yyyy-MM-dd"))))
-      .cast("string")
-
-  /** booleanvalue (facet.py:179-193). */
-  def booleanValue(c: Column): Column = c === "true"
 
   /** titlesortkey (facet.py:195-210 → util.title_sortkey util.py:727-741):
     * lowercase, strip leading "the ", drop non-alphanumerics, drop spaces. */
@@ -39,46 +20,10 @@ object Selectors {
         "[^a-z0-9 ]", ""),
       " ", "")
 
-  /** firstletter (facet.py:212-232): first char of the sortkey, '-' if
-    * empty. */
-  def firstLetter(c: Column): Column = {
-    val sk = titleSortKey(c)
-    when(length(sk) > 0, substring(sk, 1, 1)).otherwise(lit("-"))
-  }
-
   /** uri_leaf / term (facet.py:294-311 → util.uri_leaf util.py:624-649):
     * last path or fragment segment of a URI. */
   def uriLeaf(c: Column): Column =
     regexp_extract(c, "([^/#]+)[/#]?$", 1)
-
-  /** qname (facet.py:313-331): URI → prefix:local given a namespace map,
-    * longest-prefix-first; falls back to the full URI. */
-  def qname(c: Column, nsToPrefix: Map[String, String]): Column = {
-    val ordered = nsToPrefix.toSeq.sortBy(-_._1.length)
-    ordered.foldRight(c) { case ((ns, prefix), acc) =>
-      when(c.startsWith(ns),
-        concat(lit(prefix + ":"), substring(c, ns.length + 1, 1000000)))
-        .otherwise(acc)
-    }
-  }
-
-  /** resourcelabel (facet.py:234-268): URI → human label through a
-    * predicate priority chain, built as an ordered coalesce over label
-    * columns (the broadcast-dim-join production of those columns is
-    * kg.KgQueries.facetPivot-shaped); fallback = the URI itself. */
-  def resourceLabel(uri: Column, labelCols: Seq[Column]): Column =
-    coalesce((labelCols :+ uri): _*)
-
-  /** normalize_space (util.py:290-301). */
-  def normalizeSpace(c: Column): Column =
-    regexp_replace(trim(c), "\\s+", " ")
-
-  /** basefile_to_pathfrag (documentstore.py:737-765): percent-encode
-    * characters unsafe in paths (the reference quotes everything outside
-    * [a-zA-Z0-9/_.-] and maps ':' specially via %3A etc.); url_encode on
-    * the whole string matches its observable contract for flat names. */
-  def basefileToPathfrag(c: Column): Column =
-    url_encode(c)
 
   /** Natural / ordinal sort key (util.numcmp/split_numalpha,
     * util.py:194-250): "6 a" sorts between "6" and "7". Splits into
@@ -93,41 +38,6 @@ object Selectors {
         when(r.rlike("^[0-9]+$"), lpad(r, width, "0")).otherwise(r)),
       "")
   }
-
-  /** relurl (util.py:172-190): relative URL from `start` to `url` — like
-    * os.path.relpath for URLs; cross-domain stays absolute. Plain Scala
-    * (used in render paths, not a hot column). */
-  def relurl(url: String, start: String): String = {
-    def split(u: String): (String, String, String) = {
-      // (scheme://host, path, query+fragment suffix)
-      val m = "^([a-z+.-]+://[^/]*)([^?#]*)(.*)$".r
-      u match {
-        case m(dom, path, rest) => (dom, if (path.isEmpty) "/" else path, rest)
-        case _ => ("", u, "")
-      }
-    }
-    val (ud, up, urest) = split(url)
-    val (sd, sp, _) = split(start)
-    if (ud != sd || ud.isEmpty) url
-    else {
-      val from = sp.split("/").dropRight(1).filter(_.nonEmpty) // dirname
-      val to = up.split("/").filter(_.nonEmpty)
-      val common = from.zip(to).takeWhile { case (a, b) => a == b }.length
-      val ups = Seq.fill(from.length - common)("..")
-      val rel = (ups ++ to.drop(common)).mkString("/")
-      (if (rel.isEmpty) "." else rel) + urest
-    }
-  }
-
-  /** RFC century bucket (sources/tech/rfc.py:647-649): "RFC 6998"→"6900". */
-  def rfcCenturyBucket(c: Column): Column = {
-    val num = regexp_extract(c, "(\\d+)", 1)
-    concat(substring(num, lit(1), length(num) - 2), lit("00"))
-  }
-
-  /** rfc3339 / HTTP date formatting (util.py:469-509). */
-  def rfc3339(ts: Column): Column =
-    date_format(ts, "yyyy-MM-dd'T'HH:mm:ssXXX")
 
   /** Roman numeral conversions (util.py:692-726) — parse-stage helpers
     * (plain Scala, used inside typed maps, not a column fn). */

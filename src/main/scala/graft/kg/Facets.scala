@@ -1,17 +1,17 @@
 package graft.kg
 
-import graft.functions.Selectors
 import graft.model.Vocab
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Declarative facet API — the reference's `facets()` surface
   * (/root/reference/ferenda/facet.py:348-422): a facet is (rdf predicate,
-  * binding, selector, identificator, sort key, index type). A ferenda
-  * repo's facet list ports 1:1; [[facetedData]] compiles the list into one
+  * binding, index type). [[facetedData]] compiles a facet list into one
   * pivot plan over the triple table (a predicate filter, then one
-  * conditional aggregation per subject), and [[tocPageSets]] groups the
-  * pivot per facet (facet_query semantics, documentrepository.py:2293-2383).
+  * conditional aggregation per subject); [[makeSchema]] and [[boostFor]]
+  * derive the search index's typed fields and boosts from it. The TOC
+  * pagesets over the pivot are the registered `kg_toc_pages` and
+  * `kg_toc_select` queries (KgQueries).
   */
 object Facets {
 
@@ -34,33 +34,22 @@ object Facets {
       pred: String,
       /** column name in the faceted table (the SPARQL binding name) */
       binding: String,
-      /** selector: faceted column → group value (facet.py:128-177) */
-      selector: Column => Column = identity,
-      /** identificator: group value → URL-safe key (facet.py:142-154) */
-      identificator: Column => Column = Selectors.defaultIdentificator,
-      /** key for ordering docs within a group (facet.py:195-210) */
-      sortKey: Column => Column = Selectors.titleSortKey,
       /** how a search index should type this field (facet.indexingtype,
         * facet.py; drives make_schema + per-field boosts) */
       indexingType: IndexType = Label)
 
   /** The reference's stock facet set for an RFC-like repo
-    * (rdf:type, dcterms:title, dcterms:publisher, dcterms:issued year,
+    * (rdf:type, dcterms:title, dcterms:publisher, dcterms:issued,
     * dcterms:subject — rfc.py facets + facet.py defaults). Index types
     * mirror the reference's field typing: title is boosted Text,
     * identifier is a strongly-boosted Label-ish Text, issued is a
     * range-filterable DateTime. */
   val defaultFacets: Seq[Facet] = Seq(
-    Facet(Vocab.RDF_TYPE, "rdf_type", selector = Selectors.uriLeaf(_),
-      indexingType = Label),
+    Facet(Vocab.RDF_TYPE, "rdf_type", indexingType = Label),
     Facet(Vocab.dcterms("title"), "title", indexingType = Text(4.0)),
-    Facet(Vocab.dcterms("publisher"), "publisher",
-      selector = Selectors.uriLeaf(_), indexingType = Label),
-    Facet(Vocab.dcterms("issued"), "issued",
-      selector = c => substring(c, 1, 4), // year of gYearMonth/date
-      indexingType = DateTime),
-    Facet(Vocab.dcterms("subject"), "category",
-      selector = Selectors.uriLeaf(_), indexingType = Label))
+    Facet(Vocab.dcterms("publisher"), "publisher", indexingType = Label),
+    Facet(Vocab.dcterms("issued"), "issued", indexingType = DateTime),
+    Facet(Vocab.dcterms("subject"), "category", indexingType = Label))
 
   /** Search-surface facet set: the default facets plus the boosted
     * identifier field the REST search uses (fulltextindex.py:260-333's
@@ -129,28 +118,5 @@ object Facets {
           others.map(f =>
             min(when(col("pred") === f.pred, col("obj"))).as(f.binding)): _*)
       .filter(col("rdf_type").isNotNull)
-  }
-
-  /** toc_pagesets + toc_select_for_pages (documentrepository.py:2855-2995):
-    * per facet, distinct selector values with doc counts and the first
-    * sortKey-ordered member per page. */
-  def tocPageSets(faceted: DataFrame, facets: Seq[Facet]): DataFrame = {
-    val pages = facets.filter(_.binding != "rdf_type")
-      .map { f =>
-        val sel = f.selector(col(f.binding))
-        faceted.filter(col(f.binding).isNotNull)
-          .select(
-            lit(f.binding).as("facet"),
-            f.identificator(sel).as("page"),
-            col("uri"),
-            f.sortKey(coalesce(col("title"), col("uri"))).as("sk"))
-      }
-    pages.reduce(_ unionByName _)
-      .groupBy("facet", "page")
-      .agg(count(lit(1)).as("n_docs"),
-        min(struct(col("sk"), col("uri"))).as("first"))
-      .select(col("facet"), col("page"), col("n_docs"),
-        col("first.uri").as("first_uri"))
-      .orderBy("facet", "page")
   }
 }

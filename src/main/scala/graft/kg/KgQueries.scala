@@ -199,13 +199,15 @@ object KgQueries {
   def canonMap(spark: SparkSession, dir: String): DataFrame =
     ctx(spark).canon.orderBy("uri")
 
-  /** The first-letter pageset selector's normalization (Facet
-    * titlesortkey semantics) — ONE definition shared by kg_toc_pages
-    * and kg_toc_select so their page assignment can never drift. */
+  /** The first-letter pageset selector: the first character of
+    * titlesortkey — ONE definition shared by kg_toc_pages and
+    * kg_toc_select so their page assignment can never drift. Within a
+    * page kg_toc_select orders by [[tocSortKey]], the same normalization
+    * with the spaces kept. */
   private def tocSortKey: org.apache.spark.sql.Column = regexp_replace(
     regexp_replace(lower(trim(col("title"))), "^the ", ""), "[^a-z0-9 ]", "")
   private def tocFirstLetter: org.apache.spark.sql.Column =
-    substring(regexp_replace(tocSortKey, " ", ""), 1, 1)
+    substring(graft.functions.Selectors.titleSortKey(col("title")), 1, 1)
 
   /** TOC pageset (documentrepository.py:2855-2995): documents grouped by
     * first letter of the title sortkey, with per-page document counts and

@@ -136,12 +136,10 @@ object Vocab {
   val DCTERMS = "http://purl.org/dc/terms/"
   val BIBO = "http://purl.org/ontology/bibo/"
   val RDFS_LABEL = "http://www.w3.org/2000/01/rdf-schema#label"
-  val SKOS_PREF = "http://www.w3.org/2004/02/skos/core#prefLabel"
   val SKOS_ALT = "http://www.w3.org/2004/02/skos/core#altLabel"
   val SKOS_CONCEPT = "http://www.w3.org/2004/02/skos/core#Concept"
   val RDF_XMLLITERAL =
     "http://www.w3.org/1999/02/22-rdf-syntax-ns#XMLLiteral"
-  val FOAF_NAME = "http://xmlns.com/foaf/0.1/name"
   val OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
   val PROV = "http://www.w3.org/ns/prov#"
 

@@ -1,5 +1,6 @@
 package graft.rel
 
+import graft.functions.Selectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -133,16 +134,13 @@ object Relational {
 
   /** Facet selector chain: titlesortkey + firstletter (facet.py:195-232,
     * util.title_sortkey util.py:727-741) over part names. */
-  def firstLetterFacet(spark: SparkSession, dir: String): DataFrame = {
-    val sortkey = regexp_replace(
-      regexp_replace(lower(trim(col("p_name"))), "^the ", ""),
-      "[^a-z0-9 ]", "")
+  def firstLetterFacet(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "part")
-      .select(substring(regexp_replace(sortkey, " ", ""), 1, 1).as("letter"))
+      .select(substring(Selectors.titleSortKey(col("p_name")), 1, 1)
+        .as("letter"))
       .groupBy(col("letter"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("letter"))
-  }
 
   /** Facet `year` selector (facet.py:156-177): orders per year. */
   def yearFacet(spark: SparkSession, dir: String): DataFrame =

@@ -1,25 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** Structured Streaming surface.
   *
   * The reference has NO streaming engine (SURVEY.md §2.9) — its
-  * incrementality is batch freshness predicates. This module provides the
-  * Spark-native streaming equivalents for the same pipeline shapes:
+  * incrementality is batch freshness predicates. This module provides
+  * Spark-native streaming operators over the `events` table shape:
   *
-  *  - `incrementalPipeline`: the KG parse stage under
-  *    `readStream + Trigger.AvailableNow` — exactly the reference's
-  *    "process what's new, then stop" semantics (download_if_needed /
-  *    needed(), documentstore.py:400-470) with checkpointed progress
-  *    instead of mtime comparison;
-  *  - `windowedEventCounts`: watermarked sliding-window aggregation over
-  *    an event stream (the `events` table shape);
-  *  - `sessionize`: per-user session assembly via mapGroupsWithState —
-  *    the custom-state operator a training-data pipeline uses for
-  *    clickstream/interaction grouping.
+  *  - `windowedEventCounts`: watermarked tumbling-window aggregation over
+  *    an event stream;
+  *  - the three registered, driver-verified queries — `streamEventCounts`,
+  *    `streamSessions` (event-time `session_window`) and `streamDedup`
+  *    (`dropDuplicatesWithinWatermark`) — each run as one
+  *    `Trigger.AvailableNow` round into an Append-mode file sink and read
+  *    back for the DuckDB compare.
   */
 object StreamOps {
 
@@ -47,70 +44,6 @@ object StreamOps {
         approx_count_distinct("user_id").as("approx_users"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("approx_users"))
-
-  final case class Event(user_id: Long, ts: java.sql.Timestamp,
-                         event_type: String)
-  final case class Session(user_id: Long, n_events: Long,
-                           first_ts: java.sql.Timestamp,
-                           last_ts: java.sql.Timestamp, closed: Boolean)
-  final case class SessionState(n: Long, first: Long, last: Long)
-
-  /** Stateful sessionization: events per user folded into a running
-    * session; a processing-time timeout closes the session. The state
-    * machine is the `mapGroupsWithState` canonical shape. */
-  def sessionize(events: Dataset[Event],
-                 gapMs: Long = 30 * 60 * 1000L): Dataset[Session] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[SessionState, Session](
-        GroupStateTimeout.ProcessingTimeTimeout) {
-        (uid: Long, it: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Session(uid, s.n, new java.sql.Timestamp(s.first),
-              new java.sql.Timestamp(s.last), closed = true)
-          } else {
-            val evs = it.toSeq
-            val tss = evs.map(_.ts.getTime)
-            val prev = state.getOption.getOrElse(
-              SessionState(0, tss.min, tss.min))
-            val next = SessionState(prev.n + evs.size,
-              math.min(prev.first, tss.min), math.max(prev.last, tss.max))
-            state.update(next)
-            state.setTimeoutDuration(gapMs)
-            Session(uid, next.n, new java.sql.Timestamp(next.first),
-              new java.sql.Timestamp(next.last), closed = false)
-          }
-      }
-  }
-
-  /** Incremental KG parse under Structured Streaming: watch `inputDir`
-    * for new parquet files of the Iceberg-shaped source table, parse each
-    * micro-batch through the SAME stage-P function, append doc triples to
-    * `outDir`, track progress in `checkpointDir`. Trigger.AvailableNow
-    * processes the backlog and stops — the reference's build-until-done
-    * semantics, resumable from the checkpoint (north_rule). */
-  def incrementalPipeline(spark: SparkSession, inputDir: String,
-                          outDir: String, checkpointDir: String,
-                          schemaHint: DataFrame): Unit = {
-    import spark.implicits._
-    val stream = spark.readStream
-      .schema(schemaHint.schema)
-      .parquet(inputDir)
-      .as[graft.model.SourceFile]
-    val parsed = graft.kg.KgStages.parseStage(stream)
-    val triples = graft.kg.KgStages.docTriplesDf(parsed)
-    val q = triples.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
 
   // ------------------------------------------------- driver-verified query
 
@@ -141,8 +74,8 @@ object StreamOps {
 
   /** Event-time sessionization, driver-verified: the events file stream
     * grouped by Spark's `session_window` (gap-merged event-time
-    * sessions — the declarative form of the mapGroupsWithState state
-    * machine above), appended to a file sink once the watermark closes
+    * sessions, no hand-written state machine), appended to a file sink
+    * once the watermark closes
     * each session. New session iff the gap to the previous event is
     * >= 30 min (session windows are half-open [start, start+gap)); the
     * DuckDB oracle re-derives sessions with the classic lag/cumulative-

@@ -107,26 +107,6 @@ class FacetsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("tocPageSets: pages partition the docs per facet, deterministic") {
-    val tr = KgQueries.ctx(spark).triples
-    val fd = Facets.facetedData(tr, Facets.defaultFacets)
-    val toc = Facets.tocPageSets(fd, Facets.defaultFacets).collect()
-    assert(toc.nonEmpty)
-    val byFacet = toc.groupBy(_.getString(0))
-    // every toc facet's page doc-counts sum to the corpus size
-    Seq("publisher", "issued", "category").foreach { f =>
-      // publisher/issued/category facets exist only on the RFC family
-      assert(byFacet(f).map(_.getLong(2)).sum == KgQueries.N, f)
-    }
-    // identificators follow the reference's defaultidentificator contract
-    // (facet.py:143-154: lower().replace(" ","-") — non-ASCII passes
-    // through, so sv/de accented titles keep å/ä/ö here)
-    assert(toc.forall(r => {
-      val s = r.getString(1)
-      !s.contains(" ") && s == s.toLowerCase
-    }))
-  }
-
   test("makeSchema: typed fields derived from facets; conflicts rejected") {
     import graft.model.Vocab
     // single repo: default schema + one typed field per facet binding

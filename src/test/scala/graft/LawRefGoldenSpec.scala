@@ -37,14 +37,18 @@ class LawRefGoldenSpec extends AnyFunSuite {
     "sfs-tricky-uppdelat-lagnamn.txt",
     "sfs-tricky-vvfs.txt")
 
+  /** Empty when the reference tree is absent: no SFS golden is
+    * registered, and every test below that reads the tree cancels. */
   private val supported: Seq[String] =
-    new java.io.File(fixtureDir).listFiles().map(_.getName)
-      .filter(_.endsWith(".txt")).filterNot(referenceBroken).sorted.toSeq
+    Option(new java.io.File(fixtureDir).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.endsWith(".txt")).filterNot(referenceBroken)
+      .sorted
+
+  private val sfsTtl = "/root/reference/lagen/nu/res/extra/sfs.ttl"
 
   /** rdfs:label lines of sfs.ttl → normalized name → SFS id. */
   private lazy val namedLaws: Map[String, String] = {
-    val src = scala.io.Source.fromFile(
-      "/root/reference/lagen/nu/res/extra/sfs.ttl", "utf-8")
+    val src = scala.io.Source.fromFile(sfsTtl, "utf-8")
     try {
       val re = """<https://lagen\.nu/([^>]+)>\s+rdfs:label\s+"([^"]+)"""".r
       re.findAllMatchIn(src.mkString).map { m =>
@@ -97,8 +101,7 @@ class LawRefGoldenSpec extends AnyFunSuite {
   /** dcterms:alternate lines of sfs.ttl → abbreviation → SFS id
     * (KORTLAGRUM dictionary, legalref.py:264-281). */
   private lazy val abbrevs: Map[String, String] = {
-    val src = scala.io.Source.fromFile(
-      "/root/reference/lagen/nu/res/extra/sfs.ttl", "utf-8")
+    val src = scala.io.Source.fromFile(sfsTtl, "utf-8")
     try {
       val re = ("""<https://lagen\.nu/([^>]+)>[^\n]*""" +
         """dcterms:alternate\s+"([^"]+)"""").r
@@ -111,6 +114,7 @@ class LawRefGoldenSpec extends AnyFunSuite {
   Seq("lagforkortningskonflikt.txt", "mixed.txt").foreach { name =>
     test(s"golden (KORTLAGRUM): $name") {
       val dir = "/root/reference/test/files/legalref/Short"
+      assume(new java.io.File(dir).isDirectory)
       val raw = {
         val src = scala.io.Source.fromFile(s"$dir/$name", "windows-1252")
         try src.mkString finally src.close()
@@ -136,6 +140,7 @@ class LawRefGoldenSpec extends AnyFunSuite {
       "stycke.txt").foreach { name =>
     test(s"golden (ENKLALAGRUM): $name") {
       val dir = "/root/reference/test/files/legalref/Simple"
+      assume(new java.io.File(dir).isDirectory)
       val raw = {
         val src = scala.io.Source.fromFile(s"$dir/$name", "windows-1252")
         try src.mkString finally src.close()
@@ -158,6 +163,7 @@ class LawRefGoldenSpec extends AnyFunSuite {
       "regpubl-celex.txt", "regpubl-sidnr.txt").foreach { name =>
     test(s"golden (FORARBETEN): $name") {
       val dir = "/root/reference/test/files/legalref/Regpubl"
+      assume(new java.io.File(dir).isDirectory)
       val raw = {
         val src = scala.io.Source.fromFile(s"$dir/$name", "windows-1252")
         try src.mkString finally src.close()
@@ -178,6 +184,7 @@ class LawRefGoldenSpec extends AnyFunSuite {
       "dv-tricky-misc.txt").foreach { name =>
     test(s"golden (RATTSFALL): $name") {
       val dir = "/root/reference/test/files/legalref/DV"
+      assume(new java.io.File(dir).isDirectory)
       val raw = {
         val src = scala.io.Source.fromFile(s"$dir/$name", "windows-1252")
         try src.mkString finally src.close()
@@ -199,6 +206,7 @@ class LawRefGoldenSpec extends AnyFunSuite {
       "eglag-ofullstandig.txt", "tricky-misc.txt").foreach { name =>
     test(s"golden (EULAGSTIFTNING): $name") {
       val dir = "/root/reference/test/files/legalref/EGLag"
+      assume(new java.io.File(dir).isDirectory)
       val raw = {
         val src = scala.io.Source.fromFile(s"$dir/$name", "windows-1252")
         try src.mkString finally src.close()
@@ -219,6 +227,7 @@ class LawRefGoldenSpec extends AnyFunSuite {
       "jo-multiple.txt", "jo-trailing-comma.txt").foreach { name =>
     test(s"golden (MYNDIGHETSBESLUT): $name") {
       val dir = "/root/reference/test/files/legalref/Avg"
+      assume(new java.io.File(dir).isDirectory)
       val raw = {
         val src = scala.io.Source.fromFile(s"$dir/$name", "windows-1252")
         try src.mkString finally src.close()
@@ -233,6 +242,7 @@ class LawRefGoldenSpec extends AnyFunSuite {
   }
 
   test("abbreviation conflicts resolve longest-first (MBL beats MB)") {
+    assume(new java.io.File(sfsTtl).isFile)
     assert(abbrevs.contains("MBL") && abbrevs.contains("MB"))
     val parser = new LawRef.Parser(LawRef.Conf(abbrevs = abbrevs))
     val segs = parser.parse("Enligt 3 § MBL så")
@@ -241,6 +251,7 @@ class LawRefGoldenSpec extends AnyFunSuite {
   }
 
   test("dictionary carries the reference's label data (spot checks)") {
+    assume(new java.io.File(sfsTtl).isFile)
     assert(namedLaws("brottsbalken") == "1962:700")
     assert(namedLaws(LawRef.normalizeLawName("Äktenskapsbalkens")) == "1987:230")
   }

@@ -1,23 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 import graft.model.Triple
-import graft.kg.NtStore
 
-/** N-Triples codec: ingest of the reference's own RDF fixture dumps and
-  * round-trip stability. */
-class NtStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-nt-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = { spark.stop(); super.afterAll() }
+/** N-Triples codec (`Triple.fromNt` / `Triple.toNt`): decoding of the
+  * reference's own RDF fixture dumps and round-trip stability. */
+class NtStoreSpec extends AnyFunSuite {
 
   private val fixtures = "/root/reference/test/files/datasets"
 
@@ -36,22 +24,23 @@ class NtStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Triple.fromNt("").isEmpty && Triple.fromNt("# comment").isEmpty)
   }
 
-  test("ingest the reference's dataset.nt fixtures; round-trip is stable") {
+  test("the reference's dataset.nt fixtures decode line by line; " +
+      "round-trip is stable") {
     assume(new java.io.File(fixtures).isDirectory)
-    import spark.implicits._
+    def decode(f: String): Seq[Triple] = {
+      val src = scala.io.Source.fromFile(s"$fixtures/$f", "UTF-8")
+      try src.getLines().filter(_.trim.nonEmpty).toSeq
+        .map(l => Triple.fromNt(l).getOrElse(fail(s"$f: undecodable: $l")))
+      finally src.close()
+    }
     for (f <- Seq("dataset.nt", "dataset2.nt", "annotations-rfc.nt")) {
-      val path = s"$fixtures/$f"
-      val nLines = scala.io.Source.fromFile(path, "UTF-8").getLines()
-        .count(_.trim.nonEmpty)
-      val df = NtStore.read(spark, path)
-      assert(df.count() == nLines, f)
-      // round-trip at the triple level: serialize + reparse = identity
-      val back = df.as[Triple].collect()
-        .map(t => Triple.fromNt(Triple.toNt(t)).get.copy(graph = t.graph))
-      assert(back.toSet == df.as[Triple].collect().toSet, f)
+      val ts = decode(f)
+      assert(ts.nonEmpty, f)
+      // serialize + reparse = identity
+      assert(ts.map(t => Triple.fromNt(Triple.toNt(t)).get) == ts, f)
     }
     // decoded content spot checks (escapes, lang, datatype from the dump)
-    val ds = NtStore.read(spark, s"$fixtures/dataset.nt").as[Triple].collect()
+    val ds = decode("dataset.nt")
     assert(ds.exists(t => t.obj.contains("förenklat") && t.objLang.contains("sv")))
     assert(ds.exists(t => t.objDatatype.exists(_.endsWith("#date"))))
   }

@@ -115,45 +115,4 @@ class StreamOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       StreamOps.ReadBackRowBudget + 1)
     assert(StreamOps.readBackProbeLimit(0L) == 1)
   }
-
-  test("sessionize: batch-mode state function groups per user") {
-    import spark.implicits._
-    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    def at(min: Int) = new java.sql.Timestamp(base.getTime + min * 60000L)
-    val events = Seq(
-      StreamOps.Event(1L, at(0), "view"),
-      StreamOps.Event(1L, at(5), "click"),
-      StreamOps.Event(2L, at(1), "view")).toDS()
-    val sessions = StreamOps.sessionize(events).collect()
-    assert(sessions.length == 2)
-    val u1 = sessions.find(_.user_id == 1L).get
-    assert(u1.n_events == 2 && u1.first_ts == at(0) && u1.last_ts == at(5))
-    assert(sessions.find(_.user_id == 2L).get.n_events == 1)
-  }
-
-  test("incremental pipeline: AvailableNow processes backlog then new files only") {
-    import spark.implicits._
-    val in = tmp(); val out = tmp(); val cp = tmp()
-    val batch1 = KgCorpusHelper.input(spark, 10, 3L)
-    batch1.write.mode("append").parquet(in)
-    StreamOps.incrementalPipeline(spark, in, out, cp, batch1.toDF())
-    val n1 = spark.read.parquet(out).count()
-    assert(n1 > 0)
-    // second micro-batch: only the 5 new docs are parsed
-    KgCorpusHelper.input(spark, 5, 99L).write.mode("append").parquet(in)
-    StreamOps.incrementalPipeline(spark, in, out, cp, batch1.toDF())
-    val n2 = spark.read.parquet(out).count()
-    assert(n2 > n1)
-    // third run with nothing new: output unchanged (checkpoint resume)
-    StreamOps.incrementalPipeline(spark, in, out, cp, batch1.toDF())
-    assert(spark.read.parquet(out).count() == n2)
-  }
-}
-
-object KgCorpusHelper {
-  def input(spark: SparkSession, n: Int, seed: Long) = {
-    import spark.implicits._
-    spark.createDataset((0 until n).map(i =>
-      graft.kg.Corpus.doc(seed, i.toLong, n.toLong).src))
-  }
 }
