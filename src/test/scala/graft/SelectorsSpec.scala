@@ -65,4 +65,18 @@ class SelectorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(Selectors.fromRoman(Selectors.toRoman(n)) == n)
     }
   }
+
+  test("relurl matches the reference's os.path.relpath-for-urls contract") {
+    // doctest cases from util.py:175-178, run against the port behind
+    // the registered SQL relurl
+    import graft.functions.Expressions.relurlStr
+    assert(relurlStr("http://example.org/other/index.html",
+      "http://example.org/main/index.html") == "../other/index.html")
+    assert(relurlStr("http://other.org/foo.html",
+      "http://example.org/bar.html") == "http://other.org/foo.html")
+    assert(relurlStr("http://example.org/a/b/c.html",
+      "http://example.org/a/x.html") == "b/c.html")
+    assert(relurlStr("http://example.org/a/x.html#frag",
+      "http://example.org/a/y.html") == "x.html#frag")
+  }
 }
