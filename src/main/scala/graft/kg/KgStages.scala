@@ -23,9 +23,10 @@ import scala.util.control.NonFatal
   *  - C is KgPipeline.canonFromEdges: one driver byte gate; union-find +
   *    rep pick on the driver below it, Cc.distributedComponents (O(log d)
   *    rounds, checkpointed) + a distributed rep pick above it.
-  *  - M rewrites through the canon map (broadcast), dedups, and partitions
-  *    by (repo, lang) — explicit repartition before the write so one task
-  *    writes one partition directory.
+  *  - M rewrites through the canon map (broadcast), dedups, and is
+  *    written partitioned by lang, clustered by repo — a salted
+  *    (repo, lang) repartition before the write, each task sorted by
+  *    (lang, repo).
   */
 object KgStages {
 
@@ -314,19 +315,21 @@ object KgStages {
   }
 
   // ------------------------------------------------------------- stage M
+  /** Write tasks each (repo, lang) group of triples is spread over. */
+  final val WriteSalt = 4
+
   /** Union doc + link + curated triples, rewrite through the canon map,
-    * dedup, repartition for the (repo, lang)-partitioned write.
+    * dedup, repartition for the write (partitioned by lang, clustered by
+    * repo).
     *
     * Skew note: repartitioning on (repo, lang) alone funnels a mega-repo
     * (north_rule's pathological case — 35% of the corpus here) into ONE
-    * task, serializing the write of its partition directory. A salt column
-    * derived from the subject spreads each (repo, lang) directory across
-    * `writeSalt` tasks; `partitionBy` still lays files out by (repo, lang)
-    * — just several files per directory, which is exactly what a parallel
-    * writer should produce. */
+    * task, serializing its write. A salt column derived from the subject
+    * spreads each (repo, lang) group across [[WriteSalt]] tasks, so a
+    * mega-repo lands in several files inside its `lang` directory, each
+    * written by its own task. */
   def materialize(docTriples: DataFrame, linkTriples: DataFrame,
-                  curated: DataFrame, canon: DataFrame,
-                  writeSalt: Int = 4): DataFrame = {
+                  curated: DataFrame, canon: DataFrame): DataFrame = {
     val all = docTriples
       .unionByName(linkTriples)
       .unionByName(curated, allowMissingColumns = true)
@@ -337,11 +340,9 @@ object KgStages {
     // dedup semantics are unchanged — but now the repartition's
     // HashPartitioning is a subset of the dedup's grouping keys, so
     // EnsureRequirements reuses it and dropDuplicates adds no second
-    // shuffle of the full triple table. File layout and skew behavior are
-    // exactly the former repartition's (each (repo, lang) dir split across
-    // `writeSalt` write tasks).
+    // shuffle of the full triple table.
     Cc.rewrite(all, canon, dedup = false)
-      .withColumn("__salt", pmod(xxhash64(col("subj")), lit(writeSalt)))
+      .withColumn("__salt", pmod(xxhash64(col("subj")), lit(WriteSalt)))
       .repartition(col("repo"), col("lang"), col("__salt"))
       .dropDuplicates()
       .drop("__salt")

@@ -18,15 +18,18 @@ class ArnDocSpec extends AnyFunSuite {
     keywordBase = "https://lagen.nu/begrepp/")
 
   private def readBz2(p: String): String = {
+    assume(new java.io.File(root).isDirectory)
     val in = new org.apache.commons.compress.compressors.bzip2
       .BZip2CompressorInputStream(java.nio.file.Files.newInputStream(
         java.nio.file.Paths.get(p)))
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
-  private def read(p: String): String =
+  private def read(p: String): String = {
+    assume(new java.io.File(root).isDirectory)
     new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(p)), "UTF-8")
+  }
 
   private def key(t: Triple) =
     (t.subj, t.pred, t.obj, t.objIsLiteral, t.objDatatype, t.objLang)

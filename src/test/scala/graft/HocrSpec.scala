@@ -10,7 +10,7 @@ import graft.parse.PdfReader
 class HocrSpec extends AnyFunSuite {
 
   private def readFixture(name: String): String =
-    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+    new String(Fixtures.bytes(java.nio.file.Paths.get(
       s"/root/reference/test/files/pdfreader/intermediate/$name")), "UTF-8")
 
   private def normalizeSpace(s: String): String =

@@ -33,6 +33,7 @@ class JoDocSpec extends AnyFunSuite {
   private val provPred = graft.model.Vocab.PROV + "wasGeneratedBy"
 
   private def check(ydir: String, num: String): Unit = {
+    assume(new java.io.File(root).isDirectory)
     val src = SourceFile("jo", s"jo/$ydir/$num.jo", "c0", "sv",
       readBz2(s"$root/intermediate/$ydir/$num/index.xml.bz2"))
     val parsed = JoDoc.parse(src, conf)

@@ -389,6 +389,148 @@ class KgSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bag(wd) == bag(clean))
   }
 
+  /** One pipeline run over a corpus of more than 32 repos (Spark's
+    * parallel partition-discovery threshold), recording every job's
+    * description and the plan of the `triples` write. AQE partition
+    * coalescing is off for the run: a test-sized corpus would otherwise
+    * merge all shuffle partitions into one write task, which hides the
+    * salt's split of a mega-repo that a full-sized corpus keeps. */
+  private lazy val laidOut = {
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val n = 160L
+    val conf = KgPipeline.Conf(workDir = tmpDir(), n = n, seed = 21L)
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val jobs = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("graft.marker") != null) flushed.countDown()
+        else Option(e.properties.getProperty("spark.job.description"))
+          .foreach(descriptions.add)
+    }
+    @volatile var writePlan: org.apache.spark.sql.execution.SparkPlan = null
+    val plans = new QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        qe.analyzed match {
+          case w: InsertIntoHadoopFsRelationCommand
+              if w.outputPath.getName == "triples" =>
+            writePlan = qe.executedPlan
+          case _ =>
+        }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    spark.sparkContext.addSparkListener(jobs)
+    spark.listenerManager.register(plans)
+    try {
+      KgPipeline.runSynthetic(spark, conf)
+      spark.sparkContext.setLocalProperty("graft.marker", "end")
+      spark.range(1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      spark.sparkContext.setLocalProperty("graft.marker", null)
+      spark.sparkContext.removeSparkListener(jobs)
+      spark.listenerManager.unregister(plans)
+      spark.conf.unset(coalesce)
+    }
+    import scala.jdk.CollectionConverters._
+    (conf, descriptions.asScala.toSeq, writePlan)
+  }
+
+  test("triples: lang directories only, each file clustered by repo") {
+    val (conf, _, _) = laidOut
+    val dir = new java.io.File(s"${conf.workDir}/triples")
+    // hidden entries are the local filesystem's .crc checksums
+    val (dirs, files) = dir.listFiles().filterNot(_.getName.startsWith("."))
+      .partition(_.isDirectory)
+    assert(files.map(_.getName).toSeq == Seq("_SUCCESS"))
+    assert(dirs.nonEmpty && dirs.forall(_.getName.startsWith("lang=")),
+      dirs.map(_.getName).mkString(", "))
+    val parquet = dirs.toSeq.flatMap(_.listFiles())
+      .filter(_.getName.endsWith(".parquet"))
+    assert(parquet.nonEmpty)
+    import spark.implicits._
+    parquet.foreach { f =>
+      // one small file is one read partition, read in file order
+      val repos = spark.read.parquet(f.getPath).select("repo")
+        .as[Option[String]].collect().toSeq
+      assert(repos == repos.sorted, s"${f.getName} is not clustered by repo")
+    }
+  }
+
+  test("triples: same rows, schema and m2 lineage as the (repo, lang) layout") {
+    val (conf, _, _) = laidOut
+    def rd(t: String) = spark.read.parquet(s"${conf.workDir}/$t")
+    // the same materialize output, written with the former layout
+    val formerDir = s"${tmpDir()}/triples"
+    KgStages.materialize(
+        KgStages.fuzzyUpgrade(rd("doc_triples"), EntityDict.publishers,
+          Seq(Vocab.dcterms("publisher"))),
+        rd("link_triples"), KgPipeline.curatedTriples(spark, conf.n),
+        rd("canon"))
+      .write.partitionBy("repo", "lang").parquet(formerDir)
+    val (now, former) = (rd("triples"), spark.read.parquet(formerDir))
+    assert(now.schema == former.schema)
+    assert(now.columns.toSeq.takeRight(3) == Seq("graph", "repo", "lang"))
+    def bag(t: org.apache.spark.sql.DataFrame): Map[String, Int] =
+      t.collect().groupBy(_.toString).view.mapValues(_.length).toMap
+    assert(former.filter(col("repo").isNull).count() > 0, "no curated rows")
+    assert(bag(now) == bag(former))
+    // m2 lineage as the former layout's read-back yields it
+    def m2(l: org.apache.spark.sql.DataFrame) =
+      bag(l.drop("runId", "committedAt"))
+    assert(m2(rd("lineage").filter(col("stage") === "materialize")) ==
+      m2(KgStages.lineageDf(former, KgStages.longKey(xxhash64(col("subj"),
+        col("pred"), col("obj"), col("graph"))), "materialize", "former")))
+  }
+
+  test("triples: the write plans one Exchange and one Sort, on (lang, repo)") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
+    val (_, _, plan) = laidOut
+    assert(plan != null, "no triples write seen")
+    // the broadcast canon map and upgrade table are built by their own
+    // jobs; only the path from the scan to the writer counts here
+    def main(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: BroadcastExchangeExec => Nil
+      case a: AdaptiveSparkPlanExec => main(a.executedPlan)
+      case q: QueryStageExec => main(q.plan)
+      case _ => p +: p.children.flatMap(main)
+    }
+    val nodes = main(plan)
+    assert(nodes.count(_.isInstanceOf[ShuffleExchangeExec]) == 1, plan)
+    val sorts = nodes.collect { case s: SortExec => s }
+    assert(sorts.map(_.sortOrder.map(_.child.references.head.name)) ==
+      Seq(Seq("lang", "repo")), plan)
+  }
+
+  test("triples read-back launches no partition-listing job") {
+    val (conf, descriptions, _) = laidOut
+    // the premise: the former layout put more than 32 repo= directories
+    // under the table root, which Spark lists with a distributed job
+    val repos = spark.read.parquet(s"${conf.workDir}/triples")
+      .select("repo").distinct().count()
+    assert(repos > 32, s"only $repos repos")
+    assert(!descriptions.exists(_.startsWith("Listing leaf files")),
+      descriptions.filter(_.startsWith("Listing")).mkString("; "))
+  }
+
+  test("materialize's salt spreads the mega-repo over several files") {
+    val (conf, _, _) = laidOut
+    val files = spark.read.parquet(s"${conf.workDir}/triples")
+      .filter(col("repo") === Corpus.megaRepo)
+      .select(input_file_name()).distinct().count()
+    assert(files >= 2, s"$files file(s) hold ${Corpus.megaRepo}")
+  }
+
   test("parse isolates a document whose parser overflows the stack") {
     import spark.implicits._
     // one tag with 100 000 attributes: HtmlDoc's tag regex recurses once

@@ -185,6 +185,7 @@ class OfftryckStructureSpec extends AnyFunSuite {
 
   private def check(repo: String, ydir: String, num: String,
                     preset: String = "proposition"): Unit = {
+    assume(new java.io.File(root).isDirectory)
     val (src, golden) = load(repo, ydir, num, preset).getOrElse(
       fail(s"fixture $repo/$ydir/$num not loadable"))
     val body = OfftryckDoc.parse(src)

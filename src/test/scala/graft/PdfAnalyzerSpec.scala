@@ -10,7 +10,7 @@ import graft.pdf.PdfAnalyzer
 class PdfAnalyzerSpec extends AnyFunSuite {
 
   private lazy val pdf = PdfReader.parseXml(new String(
-    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+    Fixtures.bytes(java.nio.file.Paths.get(
       "/root/reference/test/files/pdfanalyze/lipsum.xml")), "UTF-8"))
   private def analyzer = new PdfAnalyzer(pdf)
 

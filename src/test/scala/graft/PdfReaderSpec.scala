@@ -326,7 +326,7 @@ $frag
   // ----------------------------------------------------- encoded fonts
   private def readIntermediate(name: String): (String, Map[String, String]) = {
     val dir = "/root/reference/test/files/pdfreader/intermediate"
-    val xml = new String(java.nio.file.Files.readAllBytes(
+    val xml = new String(Fixtures.bytes(
       java.nio.file.Paths.get(s"$dir/$name.xml")), "UTF-8")
     val fiPath = java.nio.file.Paths.get(s"$dir/$name.xml.fontinfo")
     val fi =
@@ -426,7 +426,7 @@ $frag
 
   // --------------------------------------------------- sample artifact
   test("the reference's own sample.xml intermediate (test_basic)") {
-    val xml = new String(java.nio.file.Files.readAllBytes(
+    val xml = new String(Fixtures.bytes(
       java.nio.file.Paths.get(
         "/root/reference/test/files/pdfreader/intermediate/sample.xml")),
       "UTF-8")

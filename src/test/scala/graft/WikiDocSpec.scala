@@ -60,6 +60,7 @@ class WikiDocSpec extends AnyFunSuite {
   }
 
   private def check(fixture: String, basefile: String): Unit = {
+    assume(new java.io.File(root).isDirectory)
     val src = SourceFile("wiki", s"wiki/$fixture", "c0", "sv",
       read(s"$root/downloaded/$fixture"))
     val parsed = WikiDoc.parse(src, conf)

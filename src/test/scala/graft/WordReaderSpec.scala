@@ -10,7 +10,7 @@ import graft.parse.WordReader
 class WordReaderSpec extends AnyFunSuite {
 
   private def readBytes(name: String): Array[Byte] =
-    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+    Fixtures.bytes(java.nio.file.Paths.get(
       s"/root/reference/test/files/wordreader/$name"))
 
   test("docx → simplified OOXML intermediate (test_docx)") {
@@ -57,8 +57,9 @@ class WordReaderSpec extends AnyFunSuite {
   }
 
   test("legacy binary .doc is rejected with a clear error") {
+    val bytes = readBytes("sample.doc")
     val e = intercept[UnsupportedOperationException] {
-      WordReader.read(readBytes("sample.doc"), "sample.doc")
+      WordReader.read(bytes, "sample.doc")
     }
     assert(e.getMessage.contains("antiword"))
   }
