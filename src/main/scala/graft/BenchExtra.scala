@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Optimization-round measurement harness (guide §1) — SEPARATE from the
   * frozen graft.Bench, but built on its session so measured numbers
@@ -13,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   runMain graft.BenchExtra pipeline [n] [cpus,...]  — stage timings per level
   *   runMain graft.BenchExtra noop <query> [query2 ...]  — noop-sink timing
   *   runMain graft.BenchExtra time <query> [query2 ...]  — count-action timing
-  *   runMain graft.BenchExtra explain <outDir> [query ...] — plan dumps
+  *   runMain graft.BenchExtra explain <outDir> [query ...] — diffable plan dumps
   * Malformed arguments print the usage and exit 2.
   */
 object BenchExtra {
@@ -96,6 +97,25 @@ object BenchExtra {
     } finally s.stop()
   }
 
+  /** Ids a session hands out from a counter or the JVM allocates:
+    * expression ids (`subj#2527`), the numbered variables of higher-order
+    * functions (`lambda x_70`), lambda class names with their address and
+    * hash, exchange `plan_id`s and RDD ids. */
+  private val RunIds = Seq(
+    "#\\d+".r -> "#_",
+    "(lambda [xyz])_\\d+".r -> "$1_",
+    "\\$Lambda[$\\d]*/0x[0-9a-f]+@[0-9a-f]+".r -> "\\$Lambda",
+    "plan_id=\\d+".r -> "plan_id=_",
+    "RDD\\[\\d+\\]".r -> "RDD[_]")
+
+  /** `df`'s formatted plan with [[RunIds]] blanked, so two dumps of the
+    * same code diff only where the plan itself changed. */
+  private[graft] def explainText(df: DataFrame): String =
+    RunIds.foldLeft(df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)) {
+      case (plan, (id, blank)) => id.replaceAllIn(plan, blank)
+    }
+
   private def explainDump(outDir: String, queries: Seq[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -106,13 +126,11 @@ object BenchExtra {
       val names = if (queries.nonEmpty) queries else reg.keys.toSeq.sorted
       for (q <- names) {
         try {
-          val plan = reg(q)(s, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$outDir/$q.txt"), plan)
+          java.nio.file.Files.writeString(java.nio.file.Paths.get(
+            s"$outDir/$q.txt"), explainText(reg(q)(s, sfDir)))
           println(s"wrote $outDir/$q.txt")
         } catch {
-          case e: Throwable => println(s"EXPLAIN FAILED $q: ${e.getMessage}")
+          case NonFatal(e) => println(s"EXPLAIN FAILED $q: ${e.getMessage}")
         } finally CacheRegistry.release()
       }
     } finally s.stop()

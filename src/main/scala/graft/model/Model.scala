@@ -135,7 +135,6 @@ object Vocab {
   val XSD = "http://www.w3.org/2001/XMLSchema#"
   val DCTERMS = "http://purl.org/dc/terms/"
   val BIBO = "http://purl.org/ontology/bibo/"
-  val RDFS_LABEL = "http://www.w3.org/2000/01/rdf-schema#label"
   val SKOS_ALT = "http://www.w3.org/2004/02/skos/core#altLabel"
   val SKOS_CONCEPT = "http://www.w3.org/2004/02/skos/core#Concept"
   val RDF_XMLLITERAL =

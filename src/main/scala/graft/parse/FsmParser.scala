@@ -74,19 +74,9 @@ final class FsmParser[C](cfg: FsmParser.Config[C], chunks: Iterator[C]) {
 
   val reader = new Peekable[C](chunks)
   private val stateStack = mutable.Stack[String](cfg.initialState)
-  private val removed = mutable.Set.empty[String]
   // per-state applicable-recognizer list, computed once per state instead
   // of re-filtering the recognizer vector for every chunk
   private val applicableCache = mutable.HashMap.empty[String, Vector[Recognizer[C]]]
-
-  /** The reference's parser.remove_recognizer (fsmparser.py:110-118,
-    * used by e.g. the JO parser once the single decision date has been
-    * consumed): the recognizer stops matching for the rest of the
-    * parse. */
-  def removeRecognizer(name: String): Unit = {
-    removed += name
-    applicableCache.clear()
-  }
 
   /** Current state stack, innermost first (for dynamic transitions). */
   def states: Seq[String] = stateStack.toSeq
@@ -100,9 +90,8 @@ final class FsmParser[C](cfg: FsmParser.Config[C], chunks: Iterator[C]) {
     val state = stateStack.top
     val applicable = applicableCache.getOrElseUpdate(state,
       cfg.recognizers.filter(r =>
-        !removed.contains(r.name) &&
-          (cfg.transitions.contains((state, r.name)) ||
-            cfg.dynamicTransitions.contains((state, r.name)))))
+        cfg.transitions.contains((state, r.name)) ||
+          cfg.dynamicTransitions.contains((state, r.name))))
     applicable.find(_.matches(this)) match {
       case some @ Some(_) => some
       case None =>

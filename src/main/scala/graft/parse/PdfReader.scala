@@ -155,36 +155,11 @@ object PdfReader {
       boxes.filter(box => box.top >= top && box.left >= left &&
         box.bottom <= b && box.right <= r)
     }
-
-    /** Page.crop minus the background-image convert step
-      * (pdfreader.py:1252-1270; the reference's coordinate shift is
-      * reproduced as-is). */
-    def crop(top: Int = 0, left: Int = 0, bottom: Int = -1,
-             right: Int = -1): PdfPage = {
-      val b = if (bottom < 0) height else bottom
-      val r = if (right < 0) width else right
-      val kept = boundingbox(top, left, b, r).map(box =>
-        box.copy(top = box.top - top, left = box.left - left))
-      PdfPage(number, r - left, b - top, kept)
-    }
-
-    /** Page.__str__ shape (pdfreader.py:1278-1281). */
-    def show: String = {
-      val excerpt = boxes.map(_.text).mkString(" ")
-      s"Page $number ($width x $height): '${excerpt.take(40)}...'"
-    }
   }
 
   final case class PdfDoc(pages: Vector[PdfPage],
                           fontspec: Map[Int, FontSpec]) {
     def isEmpty: Boolean = pages.map(_.boxes.size).sum == 0
-
-    /** median_box_width (pdfreader.py:1026-1037). */
-    def medianBoxWidth(threshold: Int = 0): Int = {
-      val ws = pages.flatMap(_.boxes).map(b => b.right - b.left)
-        .filter(_ >= threshold).sorted
-      ws(ws.length / 2)
-    }
 
     /** textboxes(gluefunc) (pdfreader.py:961-1024): stream the boxes,
       * merging when glue(textbox, nextbox, prevbox) holds; empties

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.text.TextOps.capDf
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label): exact all-pairs via a BLOCKED distributed scan,
@@ -178,7 +179,8 @@ object SimOps {
     * collision probability (SimOpsSpec asserts the floor on clustered
     * data). Output schema identical to [[cosinePairs]]. */
   def cosinePairsLsh(e: DataFrame, threshold: Double): DataFrame = {
-    val buckets = graft.CacheRegistry.track(capBuckets(lshBuckets(e)))
+    val buckets = graft.CacheRegistry.track(
+      capDf(lshBuckets(e), Seq("table", "bucket"), MaxBucket))
     val a = buckets.select(col("table"), col("bucket"),
       col("vec_id").as("vec_a"), col("v").as("va"), col("nrm").as("na"))
     val b = buckets.select(col("table"), col("bucket"),
@@ -261,9 +263,10 @@ object SimOps {
   /** Hot-bucket cap: an LSH bucket holding b rows contributes b² candidate
     * pairs / b·probes work — at corpus scale one degenerate bucket (all-
     * zero vectors, a constant embedding bug) goes quadratic. Buckets
-    * bigger than this are dropped from candidate generation (and counted —
-    * callers can log). The cap is a no-op on healthy data: expected bucket
-    * size is n / 2^planes per table. */
+    * bigger than this are dropped from candidate generation by
+    * [[graft.text.TextOps.capDf]], the hot-key guard the text pair scans
+    * use. The cap is a no-op on healthy data: expected bucket size is
+    * n / 2^planes per table. */
   final val MaxBucket = 100000
 
   /** Per-row LSH bucket ids: sign pattern of `LshPlanes` hyperplane dots,
@@ -290,16 +293,6 @@ object SimOps {
         col("x.table").as("table"), col("x.bucket").as("bucket"))
   }
 
-  /** Drop rows of (table, bucket) groups larger than `cap` (hot-bucket
-    * guard, see [[MaxBucket]]). One extra aggregate on the already-
-    * shuffled key — cheap relative to the candidate join it bounds. */
-  def capBuckets(buckets: DataFrame, cap: Int = MaxBucket): DataFrame = {
-    val sizes = buckets.groupBy("table", "bucket")
-      .agg(count(lit(1)).as("__bn"))
-    buckets.join(sizes.filter(col("__bn") <= cap).drop("__bn"),
-      Seq("table", "bucket"), "left_semi")
-  }
-
   /** ANN top-k via hyperplane LSH: candidates = rows sharing (table,
     * bucket) with the probe in ANY of the tables; exact cosine on the
     * candidate set only. Output schema matches knnBrute (rank within found
@@ -307,8 +300,8 @@ object SimOps {
   def lshKnn(spark: SparkSession, dir: String,
              k: Int = 5, nProbes: Int = 10): DataFrame = {
     val e = withNorm(emb(spark, dir))
-    val buckets =
-      memoTrack("lshBuckets", spark, dir)(capBuckets(lshBuckets(e)))
+    val buckets = memoTrack("lshBuckets", spark, dir)(
+      capDf(lshBuckets(e), Seq("table", "bucket"), MaxBucket))
     val probes = buckets.filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"),
         col("nrm").as("pn"), col("table"), col("bucket"))

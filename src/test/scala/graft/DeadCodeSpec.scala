@@ -53,16 +53,9 @@ class DeadCodeSpec extends AnyFunSuite {
         "flatten/contentXhtml pieces that kg queries use"),
     "Prf.f1" -> "F1 beside the precision and recall the pipeline reports",
     "Video.durationMs" -> "decoded-video accessor MultiModalSpec checks",
-    // --- spec-only code that still needs a keep-or-delete decision
-    // (ROADMAP): listed so that the guard stops new cases today
-    "ArnDoc" -> "ARN decision family: golden-tested, not in DocParsers",
-    "DirTripsDoc" -> ("committee-directive family: golden-tested, not in " +
-      "DocParsers"),
-    "JoDoc" -> "JO decision family: golden-tested, not in DocParsers",
-    "PdfReader.parseFontinfo" -> "pdfreader .fontinfo sidecar reader",
-    "PdfDoc.medianBoxWidth" -> "pdfreader median_box_width",
-    "PdfPage.crop" -> "pdfreader Page.crop",
-    "PdfPage.show" -> "pdfreader Page.__str__")
+    "PdfReader.parseFontinfo" ->
+      ("the pdfreader .fontinfo sidecar reader that decodes the encoded " +
+        "fonts of the Offtryck golden specs' and PdfReaderSpec's fixtures"))
 
   private lazy val unreachedKeys: Set[String] = {
     val main = sources(Paths.get("src/main/scala"))
